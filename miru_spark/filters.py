@@ -88,11 +88,16 @@ class Prefix:
 
     def upper_bound(self) -> str | None:
         """Smallest string > every string with this prefix, or None when
-        no such bound exists (every char already at the max code point)."""
+        no such bound exists (every char already at the max code point).
+        The increment skips the surrogate range: a lone surrogate cannot
+        be UTF-8-encoded, so U+D7FF steps to U+E000."""
         v = self.value
         for i in range(len(v) - 1, -1, -1):
             if ord(v[i]) < 0x10FFFF:
-                return v[:i] + chr(ord(v[i]) + 1)
+                nxt = ord(v[i]) + 1
+                if 0xD800 <= nxt <= 0xDFFF:
+                    nxt = 0xE000
+                return v[:i] + chr(nxt)
         return None
 
 

@@ -1,15 +1,22 @@
-"""Index reader — stats, df lookup, pruned posting fetch.
+"""Index reader — stats, df lookup, driver-side posting seek.
 
-The posting scan is where "seek" happens in a Spark-native index: the query's
-terms map to term_pref directory partitions (pruned at plan time) plus a
-``term IN (...)`` predicate pushed into the parquet scan (row-group min/max on
-the sorted term column skips within directories). Everything else is tiny
-(stats.json, df rows for <=10 query terms).
+The driver fetch is where "seek" happens in a Spark-native index. Postings
+are parquet files partitioned by ``term_pref`` (a hash of the term), so
+every file spans nearly the whole vocabulary and file-level term min/max
+statistics prune nothing. Instead each reader keeps a terms index (Lucene's
+in-memory terms index is the model): ``term -> [(file, row group, row)]``,
+built lazily for one ``term_pref`` partition the first time a query touches
+it, from that partition's ``term`` and ``bucket`` columns, and cached with
+each file's parquet footer. A query then reads only the row groups its terms live in
+and ``take``s their rows — no dataset discovery or filter scan per query.
+Everything else is tiny (stats.json, df rows for <=10 query terms).
 """
 
 from __future__ import annotations
 
 import json
+import os
+import threading
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -28,10 +35,10 @@ def _relaxed(schema):
     ("required" in parquet), but the delta-merge finalize routes carried
     rows through unionByName + localCheckpoint, which relaxes them to
     "optional" — so an incrementally-updated index legitimately mixes
-    required- and optional-field files in one postings dataset. Reading
-    with the strict first-fragment schema then fails the nullable→
-    non-nullable cast; scanning with the relaxed schema accepts both
-    generations (nullability is layout metadata here, never semantics).
+    required- and optional-field files in one postings dataset. Tables
+    read from both generations cannot be concatenated as they are; cast
+    to the relaxed schema they can (nullability is layout metadata here,
+    never semantics).
     """
     import pyarrow as pa
 
@@ -53,6 +60,91 @@ def _relaxed(schema):
     return pa.schema(
         [pa.field(f.name, relax(f.type), nullable=True) for f in schema]
     )
+
+
+class _TermLocator:
+    """The driver fetch's terms index: ``term -> [(file, row group, row)]``.
+
+    Built lazily, one ``term_pref`` partition at a time, from that
+    partition's ``term`` and ``bucket`` columns (a term's locations are
+    kept in bucket order); each file's parquet footer (``FileMetaData``)
+    is cached beside it so a query reopens a file without re-parsing the
+    footer. No file handle outlives a call. The partition build runs under
+    a lock: a reader is shared by threads, and a partition is published
+    only once complete. Memory is O(terms in the partitions touched so
+    far) — the committed vocabulary at worst, the same class as Lucene's
+    in-memory terms index.
+    """
+
+    def __init__(self, partition_files):
+        self._partition_files = partition_files  # term_pref -> [paths]
+        self._lock = threading.Lock()
+        self._parts: dict[int, dict[str, list[tuple[int, int, int]]]] = {}
+        self._files: list[tuple] = []  # file index -> (path, FileMetaData)
+
+    def _partition(self, pref: int) -> dict[str, list[tuple[int, int, int]]]:
+        part = self._parts.get(pref)
+        if part is not None:
+            return part
+        import pyarrow.parquet as pq
+
+        with self._lock:
+            part = self._parts.get(pref)
+            if part is None:
+                found: dict[str, list] = {}
+                for path in self._partition_files(pref):
+                    with pq.ParquetFile(path) as pf:
+                        fi = len(self._files)
+                        self._files.append((path, pf.metadata))
+                        for rg in range(pf.num_row_groups):
+                            t = pf.read_row_group(rg, columns=["term", "bucket"])
+                            for row, (term, bucket) in enumerate(
+                                zip(t.column(0).to_pylist(), t.column(1).to_pylist())
+                            ):
+                                found.setdefault(term, []).append(
+                                    (bucket, fi, rg, row)
+                                )
+                part = {
+                    term: [loc[1:] for loc in sorted(locs)]
+                    for term, locs in found.items()
+                }
+                self._parts[pref] = part
+        return part
+
+    def read(self, terms, columns: list[str]):
+        """The chunk rows of ``terms`` as one arrow table ordered by (term,
+        bucket), or None when no row matches. Duplicate terms are read
+        once; absent terms contribute nothing. Only the row groups holding
+        a query term are read, and one ``take`` picks the rows out."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        locs = [
+            loc
+            for t in sorted(set(terms))
+            for loc in self._partition(term_pref_py(t)).get(t, ())
+        ]
+        if not locs:
+            return None
+        groups: dict[int, set[int]] = {}
+        for fi, rg, _ in locs:
+            groups.setdefault(fi, set()).add(rg)
+        tables, start, at = [], {}, 0
+        for fi in sorted(groups):
+            path, md = self._files[fi]
+            rgs = sorted(groups[fi])
+            for rg in rgs:
+                start[fi, rg] = at
+                at += md.row_group(rg).num_rows
+            with pq.ParquetFile(path, metadata=md) as pf:
+                tables.append(pf.read_row_groups(rgs, columns=columns))
+        schema = tables[0].schema
+        if any(not t.schema.equals(schema) for t in tables[1:]):
+            relaxed = _relaxed(schema)
+            tables = [t.cast(relaxed) for t in tables]
+        return pa.concat_tables(tables).take(
+            [start[fi, rg] + row for fi, rg, row in locs]
+        )
 
 
 def lev_dist_bounded(a: str, b: str, max_edits: int) -> int:
@@ -94,6 +186,12 @@ def _lev_within(a: str, b: str, k: int, transpositions: bool = False) -> bool:
             return False
         prev2, prev = prev, cur
     return prev[-1] <= k
+
+
+# chunk columns the driver fetch materializes (pos_blob only on request)
+_FETCH_COLUMNS = [
+    "term", "bucket", "codec", "df_chunk", "blob", "i_tf", "i_dl", "blocks"
+]
 
 
 @dataclass
@@ -184,17 +282,31 @@ class IndexReader:
         # a time-traveled reader views a HISTORICAL snapshot: tombstones
         # written later must not leak into it
         self._pinned_snapshot = snapshot_id is not None
+        self._locator = _TermLocator(self._partition_files)
 
     # -------------------------------------------------------------- scans --
-    def _snapshot_file_list(self, terms: list[str] | None) -> list[str]:
-        prefs = None if terms is None else sorted({term_pref_py(t) for t in terms})
-        return self._snapmod.snapshot_files(
-            self.index_path, self.snapshot["id"], prefs
-        )
+    def _partition_files(self, pref: int) -> list[str]:
+        """Data files of one term_pref partition: the snapshot's manifest
+        entries for it, or the files in its directory."""
+        if self.snapshot is not None:
+            return self._snapmod.snapshot_files(
+                self.index_path, self.snapshot["id"], [pref]
+            )
+        d = f"{self.index_path}/postings/term_pref={pref}"
+        if not os.path.isdir(d):
+            return []
+        return [
+            f"{d}/{f}"
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
 
     def postings_df(self, terms: list[str] | None = None) -> DataFrame:
+        prefs = None if terms is None else sorted({term_pref_py(t) for t in terms})
         if self.snapshot is not None:
-            files = self._snapshot_file_list(terms)
+            files = self._snapmod.snapshot_files(
+                self.index_path, self.snapshot["id"], prefs
+            )
             if not files:
                 return self._empty_postings_df()
             df = self.spark.read.option(
@@ -205,7 +317,6 @@ class IndexReader:
             return df
         df = self.spark.read.parquet(f"{self.index_path}/postings")
         if terms is not None:
-            prefs = sorted({term_pref_py(t) for t in terms})
             df = df.filter(F.col("term_pref").isin(prefs) & F.col("term").isin(terms))
         return df
 
@@ -226,8 +337,6 @@ class IndexReader:
         pyarrow); every serving path filters these out (Lucene live-docs
         semantics) until purge_deleted rewrites the index."""
         if not hasattr(self, "_tombstones"):
-            import os
-
             import pyarrow.dataset as pads
 
             d = f"{self.index_path}/tombstones"
@@ -447,8 +556,6 @@ class IndexReader:
                 "transpositions=True supports max_edits<=1 only (OSA and "
                 "full Damerau diverge at 2 — pin one before widening)"
             )
-        import os
-
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
@@ -578,66 +685,28 @@ class IndexReader:
     def fetch_terms(
         self, terms: list[str], with_positions: bool = False
     ) -> dict[str, TermPostings]:
-        """Fetch the (few) chunk rows for the query terms — WITHOUT a Spark
-        job: a direct pyarrow dataset read of only the pruned term_pref
-        directories with a pushed-down ``term IN`` filter. This is the
-        low-latency serving path (p50 is milliseconds, not a Spark job);
-        at cluster scale the same read hits only the matching parquet
-        files+row-groups via their term min/max stats. Use
+        """Fetch the chunk rows of the query terms WITHOUT a Spark job: a
+        seek through the reader's terms index (``_TermLocator``) reads only
+        the parquet row groups the terms live in and takes their rows. This
+        is the low-latency serving path (p50 is milliseconds). The same
+        path serves the directory and the snapshot layouts; only the file
+        list of a ``term_pref`` partition differs. Use
         plans.search.search_distributed when a query's chunk rows are too
         big to hold on one node.
 
-        ``with_positions`` adds the ``pos_blob`` column; every other query
-        skips those bytes entirely (columnar pruning).
+        Duplicate terms yield one row set each; terms absent from the index
+        are absent from the result. ``with_positions`` adds the
+        ``pos_blob`` column; every other query skips those bytes entirely
+        (columnar pruning).
         """
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        if self.snapshot is not None:
-            # manifest pruning: open ONLY files whose recorded term_pref
-            # matches a query term's prefix (Iceberg partition-summary style)
-            files = self._snapshot_file_list(terms)
-            if not files:
-                return {}
-            key = tuple(files)
-            if getattr(self, "_dset_key", None) != key:
-                # two discovery passes by necessity: replace_schema refuses
-                # nullability changes inside nested types (ArrowTypeError:
-                # "matching names but differing types"), so the relaxed
-                # schema can only be applied by re-opening the dataset
-                probe = pads.dataset(files, format="parquet")
-                self._dset = pads.dataset(
-                    files, format="parquet", schema=_relaxed(probe.schema)
-                )
-                self._dset_key = key
-            dset = self._dset
-            flt = pc.field("term").isin(terms)
-        else:
-            prefs = sorted({term_pref_py(t) for t in terms})
-            # the dataset handle (directory listing + schema) is immutable
-            # for a committed index — build it once per reader, not per query
-            if getattr(self, "_dset", None) is None:
-                # two discovery passes by necessity — see the snapshot branch
-                probe = pads.dataset(
-                    f"{self.index_path}/postings",
-                    format="parquet",
-                    partitioning="hive",
-                )
-                self._dset = pads.dataset(
-                    f"{self.index_path}/postings",
-                    format="parquet",
-                    partitioning="hive",
-                    schema=_relaxed(probe.schema),
-                )
-            dset = self._dset
-            flt = pc.field("term_pref").isin(prefs) & pc.field("term").isin(terms)
-        cols = [n for n in dset.schema.names if n != "pos_blob" or with_positions]
-        tbl = dset.to_table(columns=cols, filter=flt)
+        cols = [*_FETCH_COLUMNS, "pos_blob"] if with_positions else _FETCH_COLUMNS
+        tbl = self._locator.read(terms, cols)
+        if tbl is None:
+            return {}
         # COLUMN-WISE materialization: per-block metadata stays numpy (one
         # flatten of the arrow list<struct> column) instead of ~blocks-many
         # Python dicts per query — this was ~half of warm-query latency on
         # hot terms. Per-chunk dict rows keep only scalars + numpy views.
-        tbl = tbl.sort_by([("term", "ascending"), ("bucket", "ascending")])
         nrows = tbl.num_rows
         terms_l = tbl.column("term").to_pylist()
         buckets = tbl.column("bucket").to_pylist()

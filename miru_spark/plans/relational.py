@@ -198,6 +198,14 @@ def _sql_quote(s: str) -> str:
     return s.replace("'", "''")
 
 
+def _like_prefix(prefix: str) -> str:
+    """A quoted ``LIKE`` pattern matching strings that start with
+    ``prefix``: its ``%``/``_`` (and the escape char) match only
+    themselves. Use as ``term LIKE {_like_prefix(p)}``."""
+    esc = "".join("\\" + c if c in "\\%_" else c for c in prefix)
+    return f"'{_sql_quote(esc)}%' ESCAPE '\\'"
+
+
 # the shared oracle skeleton: tokenize -> tf -> dl -> corpus stats -> df.
 # Every BM25 oracle in the repo derives from this block so the tokenization
 # convention and the BM25 constants live in ONE place.
@@ -244,8 +252,12 @@ def phrase_prefix_oracle_sql(
     text; rank = BM25 over the distinct fixed terms + ONE SynonymQuery-
     blended pseudo-term for the expansion slot (tf = summed doc-level tfs
     of the expansions completing the phrase in that doc, idf from the max
-    df across all expansions)."""
-    toks = phrase.split()
+    df across all expansions). The phrase is tokenized by the engine's own
+    ``tokenize_py`` (whitespace analyzer: split, case kept) and the
+    prefix's LIKE metacharacters are escaped."""
+    from miru_spark.functions.tokenize import tokenize_py
+
+    toks = tokenize_py(phrase)
     if not toks:
         raise ValueError("empty phrase")
     fixed, prefix = toks[:-1], toks[-1]
@@ -273,7 +285,7 @@ stats AS (SELECT count(*)::DOUBLE n, avg(dl) avgdl FROM dl),
 df    AS (SELECT term, count(*)::DOUBLE df FROM tf GROUP BY 1),
 ex    AS (SELECT term FROM (
              SELECT DISTINCT term FROM tf
-             WHERE term LIKE '{_sql_quote(prefix)}%'
+             WHERE term LIKE {_like_prefix(prefix)}
              ORDER BY term LIMIT {int(max_expansions)})),
 gdf   AS (SELECT max(df.df) AS df FROM ex JOIN df USING(term)),
 padded AS (SELECT doc_id,
@@ -1928,8 +1940,13 @@ def match_bool_prefix_oracle_sql(
     tfs, df = max member df — A41's convention); conjunctive = every
     group, disjunctive = any. The expansion group is built in SQL (LIKE
     prefix, term order, capped) so the twin can't drift from a stale
-    hand-expanded list."""
-    toks = query.split()
+    hand-expanded list. The query is tokenized by the engine's own
+    ``tokenize_py`` (whitespace analyzer: split, case kept — the index
+    keeps case too), and the prefix's LIKE metacharacters are escaped so
+    ``%`` and ``_`` match only themselves."""
+    from miru_spark.functions.tokenize import tokenize_py
+
+    toks = tokenize_py(query)
     if not toks:
         raise ValueError("empty query")
     fixed, prefix = toks[:-1], toks[-1]
@@ -1955,7 +1972,7 @@ stats AS (SELECT count(*)::DOUBLE n, avg(dl) avgdl FROM dl),
 df    AS (SELECT term, count(*)::DOUBLE df FROM tf GROUP BY 1),
 ex    AS (SELECT term FROM (
              SELECT DISTINCT term FROM tf
-             WHERE term LIKE '{_sql_quote(prefix)}%'
+             WHERE term LIKE {_like_prefix(prefix)}
              ORDER BY term LIMIT {int(max_expansions)})),
 g AS ({fixed_sel}SELECT term, {len(fixed_terms)} AS grp FROM ex),
 gdf AS (SELECT grp, max(df.df) AS df FROM g JOIN df USING(term) GROUP BY 1),

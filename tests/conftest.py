@@ -53,3 +53,38 @@ def duck():
         )
     yield con
     con.close()
+
+
+def fetched_rows(reader, terms, with_positions=False):
+    """``reader.fetch_terms`` output as sorted, comparable chunk rows."""
+    rows = []
+    for term, tp in reader.fetch_terms(terms, with_positions).items():
+        assert tp.term == term and tp.df == sum(r["df_chunk"] for r in tp.chunks)
+        assert [r["bucket"] for r in tp.chunks] == sorted(
+            r["bucket"] for r in tp.chunks
+        )
+        for r in tp.chunks:
+            bm = r["bm"]
+            rows.append((
+                r["term"], r["bucket"], r["codec"], r["df_chunk"],
+                bytes(r["blob"]), list(r["i_tf"]), list(r["i_dl"]),
+                bm["n"].tolist(), bm["last"].tolist(),
+                r["pos_blob"] if with_positions else None,
+            ))
+    return sorted(rows, key=lambda r: (r[0], r[1]))
+
+
+def scanned_rows(reader, terms, with_positions=False):
+    """The same chunk rows read by a full Spark scan of the reader's
+    postings (``postings_df``) — the reference for ``fetched_rows``."""
+    rows = [
+        (
+            r.term, r.bucket, r.codec, r.df_chunk,
+            bytes(r.blob), list(r.i_tf), list(r.i_dl),
+            [b.n for b in r.blocks], [b.last_docid for b in r.blocks],
+            (bytes(r.pos_blob) if r.pos_blob is not None else None)
+            if with_positions else None,
+        )
+        for r in reader.postings_df(list(terms)).collect()
+    ]
+    return sorted(rows, key=lambda r: (r[0], r[1]))

@@ -336,9 +336,27 @@ def test_prefix_upper_bound_and_validation():
     assert Prefix("abc").upper_bound() == "abd"
     assert Prefix("ab" + chr(0x10FFFF)).upper_bound() == "ac"
     assert Prefix(chr(0x10FFFF)).upper_bound() is None
+    # the increment skips the surrogate range (not UTF-8 encodable)
+    assert Prefix("a" + chr(0xD7FF)).upper_bound() == "a" + chr(0xE000)
     assert Prefix("a") == Prefix("a") and Prefix("a") != Prefix("b")
     with pytest.raises(ValueError):
         Prefix("")
+
+
+@pytest.mark.parametrize("value", ["doc_0001" + chr(0xD7FF), chr(0xD7FF)])
+def test_prefix_filter_at_surrogate_edge(reader, value):
+    """A Prefix ending in U+D7FF builds a UTF-8-encodable range bound: the
+    driver-side scan does not raise and matches starts_with."""
+    from miru_spark.filters import Prefix
+
+    paths = {
+        r.doc_id: r.path
+        for r in reader.docmap_df().select("doc_id", "path").collect()
+    }
+    ids = reader.filter_doc_ids({"path": Prefix(value)})
+    assert sorted(int(i) for i in ids) == sorted(
+        d for d, p in paths.items() if p.startswith(value)
+    )
 
 
 def test_not_filter_matches_postfilter(reader):

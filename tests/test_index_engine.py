@@ -10,7 +10,7 @@ from miru_spark.index.writer import build_index, read_manifest
 from miru_spark.plans.relational import bm25_oracle_sql
 from miru_spark.plans.search import search_distributed, search_exhaustive, search_topk
 from miru_spark.schema import read_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, fetched_rows, scanned_rows
 
 QUERIES = [
     (["join", "hash"], "conjunctive"),
@@ -242,6 +242,15 @@ def test_non_phrase_fetch_skips_pos_blob(pos_index):
     assert "pos_blob" not in row
     tps2 = pos_index.fetch_terms(["join"], with_positions=True)
     assert tps2["join"].chunks[0]["pos_blob"] is not None
+
+
+def test_positional_fetch_matches_scan(pos_index):
+    """``with_positions=True`` seeks the same rows, pos_blob included, that
+    a full scan of the postings reads."""
+    terms = ["join", "dup", "the", "zz_absent"]
+    got = fetched_rows(pos_index, terms, with_positions=True)
+    assert got and all(r[-1] is not None for r in got)
+    assert got == scanned_rows(pos_index, terms, with_positions=True)
 
 
 @pytest.mark.parametrize("phrase", ["the a", "data the table", "a a"])

@@ -90,7 +90,9 @@ def test_nonvacuous(spark, pos_reader):
     assert len(exp) > 1
 
 
-@pytest.mark.parametrize("phrase", ["the a", "join h", "s"])
+@pytest.mark.parametrize(
+    "phrase", ["the a", "join h", "s", "the A", "join h%", "join h_"]
+)
 def test_matches_duck_oracle(pos_reader, duck, phrase):
     got = search_phrase_prefix(pos_reader, phrase, k=10)
     exp = duck.execute(phrase_prefix_oracle_sql(phrase, k=10)).fetchall()

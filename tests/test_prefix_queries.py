@@ -182,7 +182,12 @@ def test_suggest_spelling_no_neighbors(reader):
     [("the d", "conjunctive"), ("the d", "disjunctive"),
      ("dup li", "disjunctive"), ("d", "conjunctive"),
      ("the a d", "conjunctive"), ("the zzzz", "conjunctive"),
-     ("the zzzz", "disjunctive")],
+     ("the zzzz", "disjunctive"),
+     # case is kept (whitespace analyzer) and LIKE metacharacters in the
+     # prefix match only themselves, on both sides
+     ("THE D", "conjunctive"), ("the D", "disjunctive"),
+     ("the d%", "disjunctive"), ("the d_", "disjunctive"),
+     ("the %_", "disjunctive")],
     ids=lambda x: str(x).replace(" ", "_"),
 )
 def test_match_bool_prefix_matches_oracle(reader, duck, query, mode):

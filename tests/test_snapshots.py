@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,7 +15,7 @@ from miru_spark.index.reader import IndexReader
 from miru_spark.index.writer import build_index
 from miru_spark.plans.search import search_topk
 from miru_spark.schema import read_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, fetched_rows, scanned_rows
 
 
 @pytest.fixture(scope="module")
@@ -111,6 +112,34 @@ def test_snapshot_time_travel(spark, snap_stream_idx):
         )
     # and the current snapshot differs (the new docs changed the corpus)
     assert cur.stats != old.stats
+
+
+def test_snapshot_seek_mixes_file_generations(spark, snap_stream_idx, reader):
+    """The delta snapshot mixes required-field files (carried from
+    snapshot 1) with optional-field ones (re-merged); one fetch spanning
+    both reads the rows a manifest-driven scan reads, and decodes to the
+    postings of a fresh batch build. The time-travelled reader seeks its
+    own snapshot's rows."""
+    import pyarrow.parquet as pq
+
+    pick: dict[bool, str] = {}
+    for rel in snapmod.read_snapshot(snap_stream_idx, 2)["files"]:
+        path = os.path.join(snap_stream_idx, rel)
+        nullable = pq.read_schema(path).field("term").nullable
+        pick.setdefault(
+            nullable, pq.read_table(path, columns=["term"])["term"][0].as_py()
+        )
+    assert set(pick) == {False, True}, "need both file generations"
+    cur = IndexReader(spark, snap_stream_idx)
+    old = IndexReader(spark, snap_stream_idx, snapshot_id=1)
+    terms = [pick[False], pick[True], "the", "join", "zz_absent"]
+    for r in (cur, old):
+        assert fetched_rows(r, terms) == scanned_rows(r, terms)
+    got, ref = cur.fetch_terms(terms), reader.fetch_terms(terms)
+    assert set(got) == set(ref)
+    for t in ref:
+        for a, b in zip(cur.decode_term(got[t]), reader.decode_term(ref[t])):
+            np.testing.assert_array_equal(a, b)
 
 
 def test_snapshot_vacuum_keeps_current(spark, snap_stream_idx):

@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from miru_spark.schema import read_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, fetched_rows, scanned_rows
 
 
 @pytest.fixture(scope="module")
@@ -221,6 +221,27 @@ def test_delta_merge_leaves_untouched_chunks_byte_identical(spark, tmp_path):
         a = search_topk(ra, terms, mode=mode, k=10)
         b = search_topk(rb, terms, mode=mode, k=10)
         assert a == b
+
+    # one driver fetch spanning an untouched (required-field) file and a
+    # re-merged (optional-field) one decodes to the batch build's postings
+    import pyarrow.parquet as pq
+
+    pick = {}
+    for p in sorted(after):
+        if p.endswith(".parquet"):
+            path = f"{idx}/postings/{p}"
+            nullable = pq.read_schema(path).field("term").nullable
+            pick.setdefault(
+                nullable, pq.read_table(path, columns=["term"])["term"][0].as_py()
+            )
+    assert set(pick) == {False, True}, "need both file generations"
+    terms = [pick[False], pick[True], "zz_absent"]
+    assert fetched_rows(ra, terms) == scanned_rows(ra, terms)
+    got, ref = ra.fetch_terms(terms), rb.fetch_terms(terms)
+    assert set(got) == set(ref) == set(pick.values())
+    for t in ref:
+        for x, y in zip(ra.decode_term(got[t]), rb.decode_term(ref[t])):
+            np.testing.assert_array_equal(x, y)
 
 
 def test_streamed_positional_index_serves_phrase(spark, tmp_path):
