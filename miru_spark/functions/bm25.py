@@ -85,10 +85,3 @@ def lm_dirichlet_np(
         mu / (doc_len.astype(np.float64) + mu)
     )
     return np.maximum(s, 0.0)
-
-
-def max_block_score(tf: np.ndarray, idf: float, doc_len: np.ndarray, avgdl: float) -> float:
-    """Exact per-block score upper bound for block-max WAND metadata."""
-    if tf.size == 0:
-        return 0.0
-    return float(score_np(tf, idf, doc_len, avgdl).max())

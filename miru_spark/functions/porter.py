@@ -263,10 +263,12 @@ def stem_corpus_dict(corpus, content_col: str = "content"):
         )
     )
     other = [c for c in corpus.columns if c != content_col]
+    # left join: empty and all-stopword docs have no tokens, hence no
+    # stemmed row, and keep empty content exactly as the UDF path does
     return (
         corpus.select(*other)
-        .join(stemmed, "doc_id")
-        .withColumn(content_col, F.col("__stemmed"))
+        .join(stemmed, "doc_id", "left")
+        .withColumn(content_col, F.coalesce(F.col("__stemmed"), F.lit("")))
         .drop("__stemmed")
         .select(*corpus.columns)
     )

@@ -42,12 +42,6 @@ def normalize_corpus(corpus: DataFrame, tokenizer: str = "whitespace") -> DataFr
     ).withColumn("doc_len", F.size("tokens").cast("long"))
 
 
-def docmap_of(normalized: DataFrame) -> DataFrame:
-    return normalized.select(
-        "doc_id", "repo", "path", "commit", "lang", "content_sha256", "doc_len"
-    )
-
-
 def docmap_direct(corpus_with_ids: DataFrame, tokenizer: str = "whitespace") -> DataFrame:
     """Docmap straight from the corpus — sha256 in Arrow workers, token count
     via a single regexp_count (no token-array materialization). The cheap

@@ -166,17 +166,3 @@ def merge_segments(
         )
 
     return seg.groupBy("term", "bucket").applyInPandas(merge_fn, CHUNK_SCHEMA)
-
-
-def corpus_stats_row(normalized: DataFrame) -> dict:
-    """A10 — N, avgdl, total tokens (single tiny JVM aggregate)."""
-    row = normalized.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("doc_len").alias("avgdl"),
-        F.sum("doc_len").alias("n_tokens"),
-    ).collect()[0]
-    return {
-        "n_docs": int(row["n_docs"]),
-        "avgdl": float(row["avgdl"]),
-        "n_tokens": int(row["n_tokens"]),
-    }

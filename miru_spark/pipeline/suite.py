@@ -128,12 +128,6 @@ def q_ann_brute(spark, sf):
     return cosine_topk_bruteforce(_emb(spark, sf), _query_vec(spark, sf), k=10)
 
 
-def sql_ann_brute(spark, sf):
-    from miru_spark.pipeline.similarity import cosine_topk_oracle_sql
-
-    return cosine_topk_oracle_sql(_query_vec(spark, sf), k=10)
-
-
 def q_ann_int8(spark, sf):
     from miru_spark.pipeline.similarity import ann_int8_topk
 

@@ -828,7 +828,11 @@ def search_bool_distributed(
                 chunks, node, k, n_docs, avgdl, round_digits, allow_theta
             )
 
-    from miru_spark.plans.search import bm25_contrib_gen
+    from miru_spark.plans.search import (
+        _drop_tombstones,
+        _where_ids,
+        bm25_contrib_gen,
+    )
 
     scored = chunks.mapInArrow(
         bm25_contrib_gen(n_docs, avgdl, emit_term=True), _SCORED_SCHEMA
@@ -853,19 +857,8 @@ def search_bool_distributed(
             )
     out = pivoted.filter(_match_col(node, col, pcol))
     if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = reader.docmap_df()
-        for c, val in where.items():
-            if c not in allow.columns:
-                raise ValueError(f"unknown docmap column {c!r}")
-            allow = allow.filter(spark_predicate(c, val))
-        out = out.join(allow.select("doc_id"), "doc_id", "left_semi")
-    tomb_df = reader.tombstones_df()
-    if tomb_df is not None:
-        if reader.tombstones.size <= 5_000_000:
-            tomb_df = F.broadcast(tomb_df)
-        out = out.join(tomb_df, "doc_id", "left_anti")
+        out = out.join(_where_ids(reader, where), "doc_id", "left_semi")
+    out = _drop_tombstones(reader, out)
     score = _score_col(node, col, pcol)
     if round_digits is not None:
         score = F.round(score, round_digits)

@@ -160,6 +160,8 @@ def search_fields_dismax_distributed(
     (doc_id, field) = per-field subquery score + distinct-term match count
     -> per-field AND filter (conjunctive) -> hash agg by doc_id for the
     max + tie_breaker * rest combine. Both aggs partial-combine map-side."""
+    from miru_spark.plans.search import _where_ids, bm25_contrib_gen
+
     if mode not in ("disjunctive", "conjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     terms = list(dict.fromkeys(terms))
@@ -184,9 +186,6 @@ def search_fields_dismax_distributed(
             F.sum("df_chunk").alias("df_global")
         )
         chunks = chunks.join(F.broadcast(term_df), "term")
-
-        from miru_spark.plans.search import bm25_contrib_gen
-
         score_chunks = bm25_contrib_gen(
             n_docs, avgdl, weight=weight, emit_term=True, field_tag=fname
         )
@@ -199,14 +198,8 @@ def search_fields_dismax_distributed(
     for p in scored_parts[1:]:
         scored = scored.unionByName(p)
     if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = next(iter(readers.values())).docmap_df()
-        for col, val in where.items():
-            if col not in allow.columns:
-                raise ValueError(f"unknown docmap column {col!r}")
-            allow = allow.filter(spark_predicate(col, val))
-        scored = scored.join(allow.select("doc_id"), "doc_id", "left_semi")
+        allow = _where_ids(next(iter(readers.values())), where)
+        scored = scored.join(allow, "doc_id", "left_semi")
     per_field = scored.groupBy("doc_id", "field").agg(
         F.sum("contrib").alias("s_f"),
         F.countDistinct("term").alias("nterm"),

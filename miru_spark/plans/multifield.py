@@ -316,7 +316,11 @@ def search_fields_combined(
         ]
     )
 
-    from miru_spark.plans.search import bm25_contrib_gen
+    from miru_spark.plans.search import (
+        _drop_tombstones,
+        _where_ids,
+        bm25_contrib_gen,
+    )
 
     parts = []
     for fname, reader in readers.items():
@@ -388,22 +392,11 @@ def search_fields_combined(
     if mode == "conjunctive":
         agg = agg.filter(F.col("nmatch") == len(terms))
     if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = first.docmap_df()
-        for c, val in where.items():
-            if c not in allow.columns:
-                raise ValueError(f"unknown docmap column {c!r}")
-            allow = allow.filter(spark_predicate(c, val))
-        agg = agg.join(allow.select("doc_id"), "doc_id", "left_semi")
+        agg = agg.join(_where_ids(first, where), "doc_id", "left_semi")
     # tombstones union across fields (a delete applied to any field index
     # kills the doc, matching search_fields_distributed)
     for reader in readers.values():
-        tomb = reader.tombstones_df()
-        if tomb is not None:
-            if reader.tombstones.size <= 5_000_000:
-                tomb = F.broadcast(tomb)
-            agg = agg.join(tomb, "doc_id", "left_anti")
+        agg = _drop_tombstones(reader, agg)
     score = (
         F.round(F.col("score"), round_digits)
         if round_digits is not None
@@ -438,7 +431,7 @@ def search_fields_distributed(
     decode+score (weighted) -> UNION -> one hash agg by doc_id.
     Conjunctive counts DISTINCT matched terms across fields, so a term
     present in several fields satisfies the requirement once."""
-    from collections.abc import Iterator
+    from miru_spark.plans.search import _where_ids, bm25_contrib_gen
 
     terms = list(dict.fromkeys(terms))
     if not terms:
@@ -461,9 +454,6 @@ def search_fields_distributed(
             F.sum("df_chunk").alias("df_global")
         )
         chunks = chunks.join(F.broadcast(term_df), "term")
-
-        from miru_spark.plans.search import bm25_contrib_gen
-
         score_chunks = bm25_contrib_gen(
             n_docs, avgdl, weight=weight, emit_term=True
         )
@@ -476,14 +466,8 @@ def search_fields_distributed(
     for p in scored_parts[1:]:
         scored = scored.unionByName(p)
     if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = next(iter(readers.values())).docmap_df()
-        for col, val in where.items():
-            if col not in allow.columns:
-                raise ValueError(f"unknown docmap column {col!r}")
-            allow = allow.filter(spark_predicate(col, val))
-        scored = scored.join(allow.select("doc_id"), "doc_id", "left_semi")
+        allow = _where_ids(next(iter(readers.values())), where)
+        scored = scored.join(allow, "doc_id", "left_semi")
     agg = scored.groupBy("doc_id").agg(
         F.sum("contrib").alias("score"),
         F.countDistinct("term").alias("nterm"),

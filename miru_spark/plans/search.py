@@ -877,13 +877,8 @@ def search_facets(
     projection -> hash agg by facet. The docmap side prunes to two columns
     at scan time; AQE picks the join strategy from the candidate set's
     runtime size."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", facet_col)
     return (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, where, facet_col)
         .groupBy(facet_col)
         .agg(F.count("*").alias("n_docs"))
         .orderBy(facet_col)
@@ -918,14 +913,9 @@ def search_facets_by_metric(
         raise ValueError(f"unknown metric {metric!r}")
     if size < 1:
         raise ValueError("size must be >= 1")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", facet_col, metric_col)
     x = F.col(metric_col).cast("long")
     agg = (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, where, facet_col, metric_col)
         .groupBy(facet_col)
         .agg(
             F.count("*").alias("n_docs"),
@@ -975,13 +965,8 @@ def search_multi_terms(
         raise ValueError("multi_terms needs >= 2 fields (use search_facets)")
     if size < 1:
         raise ValueError("size must be >= 1")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", *fields)
     return (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, where, *fields)
         .groupBy(*fields)
         .agg(F.count("*").alias("n_docs"))
         .orderBy(F.desc("n_docs"), *fields)
@@ -1009,36 +994,7 @@ def search_adjacency_matrix(
     filters-as-queries."""
     if not filters:
         raise ValueError("adjacency_matrix needs at least one named filter")
-    names = sorted(filters)
-    rows = [(n, t) for n in names for t in dict.fromkeys(filters[n])]
-    spark = reader.spark
-    fdf = spark.createDataFrame(rows, "fname string, term string")
-    sizes = {n: len(dict.fromkeys(filters[n])) for n in names}
-    sdf = spark.createDataFrame(list(sizes.items()), "fname string, n_terms int")
-    terms = sorted({t for _, t in rows})
-    chunks = reader.postings_df(terms)
-    ids = chunks.mapInArrow(_ids_term_arrow, _DOCID_TERM_SCHEMA)
-    excl = _with_tombstones(reader, _exclusion_ids(reader, exclude or []))
-    if excl is not None and excl.size:
-        ids = ids.join(
-            spark.createDataFrame([(int(d),) for d in excl], "doc_id long"),
-            "doc_id", "left_anti",
-        )
-    if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = reader.docmap_df()
-        for c, val in where.items():
-            allow = allow.filter(spark_predicate(c, val))
-        ids = ids.join(allow.select("doc_id"), "doc_id", "left_semi")
-    matched = (
-        ids.join(F.broadcast(fdf), "term")
-        .groupBy("doc_id", "fname")
-        .agg(F.count_distinct("term").alias("nm"))
-        .join(F.broadcast(sdf), "fname")
-        .filter(F.col("nm") == F.col("n_terms"))
-        .select("doc_id", "fname")
-    )
+    _, matched, _ = _filter_matches(reader, filters, exclude, where)
     a = matched.alias("a")
     b = matched.alias("b")
     pairs = a.join(
@@ -1085,12 +1041,9 @@ def search_variable_width_histogram(
 
     if buckets < 1:
         raise ValueError("buckets must be >= 1")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
-    vals = cand.join(dm, "doc_id").select(F.col(col).cast("long").alias("v"))
+    vals = _candidates(reader, terms, mode, exclude, where, col).select(
+        F.col(col).cast("long").alias("v")
+    )
     distinct = vals.distinct()
     w = Window.orderBy("v")
     boundaries = [
@@ -1141,43 +1094,9 @@ def search_filters_agg(
     doc list ever reaches the driver."""
     if not filters:
         raise ValueError("filters agg needs at least one named filter")
-    names = sorted(filters)
-    if any(n == "_other_" for n in names):
+    if "_other_" in filters:
         raise ValueError("'_other_' is the reserved other-bucket name")
-    rows = [(n, t) for n in names for t in dict.fromkeys(filters[n])]
-    spark = reader.spark
-    fdf = spark.createDataFrame(rows, "fname string, term string")
-    sdf = spark.createDataFrame(
-        [(n, len(dict.fromkeys(filters[n]))) for n in names],
-        "fname string, n_terms int",
-    )
-    terms = sorted({t for _, t in rows})
-    chunks = reader.postings_df(terms)
-    ids = chunks.mapInArrow(_ids_term_arrow, _DOCID_TERM_SCHEMA)
-    live = reader.docmap_df().select("doc_id")
-    excl = _with_tombstones(reader, _exclusion_ids(reader, exclude or []))
-    if excl is not None and excl.size:
-        dead = spark.createDataFrame(
-            [(int(d),) for d in excl], "doc_id long"
-        )
-        ids = ids.join(dead, "doc_id", "left_anti")
-        live = live.join(dead, "doc_id", "left_anti")
-    if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = reader.docmap_df()
-        for c, val in where.items():
-            allow = allow.filter(spark_predicate(c, val))
-        ids = ids.join(allow.select("doc_id"), "doc_id", "left_semi")
-        live = live.join(allow.select("doc_id"), "doc_id", "left_semi")
-    matched = (
-        ids.join(F.broadcast(fdf), "term")
-        .groupBy("doc_id", "fname")
-        .agg(F.count_distinct("term").alias("nm"))
-        .join(F.broadcast(sdf), "fname")
-        .filter(F.col("nm") == F.col("n_terms"))
-        .select("doc_id", "fname")
-    )
+    sdf, matched, live = _filter_matches(reader, filters, exclude, where)
     named = (
         sdf.select("fname")
         .join(
@@ -1224,13 +1143,10 @@ def search_facets_composite(
         raise ValueError("composite aggregation needs at least one source")
     if after is not None and len(after) != len(sources):
         raise ValueError("after key arity must match sources")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", *sources)
-    agg = cand.join(dm, "doc_id").groupBy(*list(sources)).agg(
-        F.count("*").alias("n_docs")
+    agg = (
+        _candidates(reader, terms, mode, exclude, where, *sources)
+        .groupBy(*sources)
+        .agg(F.count("*").alias("n_docs"))
     )
     if after is not None:
         # tuple ordering: (s0, s1, ...) > after, expanded to boolean algebra
@@ -1472,14 +1388,9 @@ def search_sorted(
     Returns (doc_id, <sort_field>)."""
     if sort_field == "doc_id":
         raise ValueError("sort by doc_id is just the candidate order")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", sort_field)
     key = F.col(sort_field).asc() if ascending else F.col(sort_field).desc()
     return (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, where, sort_field)
         .orderBy(key, F.col("doc_id").asc())
         .limit(k)
     )
@@ -1504,14 +1415,9 @@ def search_facets_histogram(
     codegen."""
     if width <= 0:
         raise ValueError("width must be positive")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
     bin_lo = (F.floor(F.col(col) / width) * width).cast("long").alias("bin_lo")
     return (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, where, col)
         .groupBy(bin_lo)
         .agg(F.count("*").alias("n_docs"))
         .orderBy("bin_lo")
@@ -1549,7 +1455,7 @@ def search_histogram_pipeline(
       buckets (window shorter at the leading edge, like ES moving_fn);
     * ``sdiff``   = n_docs - lag(n_docs, serial_lag) (ES ``serial_diff``;
       null on the first ``serial_lag`` buckets);
-    * ``pct_of_sum`` = n_docs / total(n_docs) * 100 (ES ``normalize``
+    * ``pct_of_sum`` = n_docs * 100 / total(n_docs) (ES ``normalize``
       method=percent_of_sum) — the total is a window sum over the bucket
       rows, NOT a second candidate pass;
     * ``selector_min`` drops buckets with n_docs < floor AFTER the other
@@ -1572,7 +1478,9 @@ def search_histogram_pipeline(
     total = Window.orderBy("bin_lo").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    pct = F.col("n_docs") / F.sum("n_docs").over(total) * 100.0
+    # same expression order as the SQL twin (n * 100.0 / total): the float
+    # results must agree bit for bit before rounding
+    pct = F.col("n_docs") * 100.0 / F.sum("n_docs").over(total)
     if round_digits is not None:
         mov_avg = F.round(mov_avg, round_digits)
         pct = F.round(pct, round_digits)
@@ -1647,12 +1555,7 @@ def search_facets_ranges(
     for lo, hi in ranges:
         if lo is not None and hi is not None and lo >= hi:
             raise ValueError(f"empty range [{lo}, {hi})")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
-    joined = cand.join(dm, "doc_id")
+    joined = _candidates(reader, terms, mode, exclude, where, col)
 
     def label(lo, hi):
         return f"{'*' if lo is None else lo}-{'*' if hi is None else hi}"
@@ -1707,14 +1610,11 @@ def search_facets_sampled(
 
     if not 0.0 < probability <= 1.0:
         raise ValueError(f"probability must be in (0,1], got {probability}")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    sampled = hash_sample(cand, probability, seed=seed)
+    cand = _candidates(reader, terms, mode, exclude, where)
     dm = reader.docmap_df().select("doc_id", facet_col)
     return (
-        sampled.join(dm, "doc_id")
+        hash_sample(cand, probability, seed=seed)
+        .join(dm, "doc_id")
         .groupBy(facet_col)
         .agg(F.count("*").alias("n_docs"))
         .orderBy(F.desc("n_docs"), F.asc(facet_col))
@@ -1756,13 +1656,8 @@ def _candidate_moments(
     one map-side-combined hash agg of exact integer moments (n, min, max,
     Σx, Σx²) — a handful of longs per partition at any corpus size, and
     partition-merge-order independent by exactness."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
     x = F.col(col).cast("long")
-    return cand.join(dm, "doc_id").agg(
+    return _candidates(reader, terms, mode, exclude, where, col).agg(
         F.count("*").alias("n_docs"),
         F.min(x).alias("min_v"),
         F.max(x).alias("max_v"),
@@ -1823,14 +1718,9 @@ def search_matrix_stats(
     statistics derive from them in one final projection. Exact integer
     partials make the result independent of partition merge order — the
     same discipline as the B27 integer-cents oracle."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    cols = ["doc_id"] + [c for c in (col_x, col_y) if c != "doc_id"]
-    dm = reader.docmap_df().select(*cols)
+    cols = [c for c in (col_x, col_y) if c != "doc_id"]
     x, y = F.col(col_x).cast("long"), F.col(col_y).cast("long")
-    sums = cand.join(dm, "doc_id").agg(
+    sums = _candidates(reader, terms, mode, exclude, where, *cols).agg(
         F.count("*").alias("n"),
         F.sum(x).alias("sx"),
         F.sum(y).alias("sy"),
@@ -1886,12 +1776,7 @@ def search_cardinality(
     (a real distinct shuffle) for oracle-checkable results; the pytest
     asserts the sketch lands within its ``rsd`` error band of the exact
     answer."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
-    j = cand.join(dm, "doc_id")
+    j = _candidates(reader, terms, mode, exclude, where, col)
     agg = (
         F.count_distinct(F.col(col))
         if exact
@@ -1919,13 +1804,8 @@ def search_percentiles(
     shape (one map-side-combinable agg, no row explosion) is the same."""
     if not percentiles or any(not (0 < p <= 1) for p in percentiles):
         raise ValueError("percentiles must be in (0, 1]")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
     arr = ",".join(repr(float(p)) for p in percentiles)
-    row = cand.join(dm, "doc_id").selectExpr(
+    row = _candidates(reader, terms, mode, exclude, where, col).selectExpr(
         f"percentile({col}, array({arr})) AS v"
     )
     pct_arr = F.array(*[F.lit(float(p)) for p in percentiles])
@@ -1958,11 +1838,6 @@ def search_percentile_ranks(
     shape."""
     if not values:
         raise ValueError("values must be non-empty")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
     x = F.col(col).cast("double")
     aggs = [F.count("*").alias("n")]
     for i, v in enumerate(values):
@@ -1972,7 +1847,7 @@ def search_percentile_ranks(
             F.max(F.when(x <= lv, x)).alias(f"xle_{i}"),
             F.min(F.when(x > lv, x)).alias(f"xgt_{i}"),
         ]
-    sums = cand.join(dm, "doc_id").agg(*aggs)
+    sums = _candidates(reader, terms, mode, exclude, where, col).agg(*aggs)
     rows = []
     for i, v in enumerate(values):
         lv = F.lit(float(v))
@@ -2021,12 +1896,9 @@ def search_string_stats(
     partial agg collapses it to |alphabet| longs per partition before the
     shuffle, so the exchanged state is bounded by the alphabet at any
     corpus size."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
-    vals = cand.join(dm, "doc_id").select(F.col(col).alias("v"))
+    vals = _candidates(reader, terms, mode, exclude, where, col).select(
+        F.col(col).alias("v")
+    )
     lens = vals.agg(
         F.count("*").alias("n_vals"),
         F.min(F.length("v")).cast("long").alias("min_len"),
@@ -2088,12 +1960,7 @@ def search_mad(
     the A60 identity), broadcast the single-row median back, then the
     median of absolute deviations. Each pass is one map-side-combined agg;
     nothing corpus-sized ever reaches the driver."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
-    vals = cand.join(dm, "doc_id").select(
+    vals = _candidates(reader, terms, mode, exclude, where, col).select(
         F.col(col).cast("double").alias("x")
     )
     med = vals.agg(
@@ -2108,7 +1975,9 @@ def search_mad(
             F.expr("percentile(abs(x - median_raw), 0.5)").alias("mad_raw"),
         )
         .select(
-            "n_docs",
+            # an empty candidate set leaves the cross join empty, so first()
+            # yields NULL; the twin (and ES) report a zero count there
+            F.coalesce("n_docs", F.lit(0)).alias("n_docs"),
             F.round("median_raw", 6).alias("median_v"),
             F.round("mad_raw", 6).alias("mad"),
         )
@@ -2128,13 +1997,8 @@ def search_boxplot(
     (quartiles via the exact interpolated ``percentile`` array — the same
     rank-``p*(n-1)`` spec as A60, == DuckDB ``quantile_cont``; ES's
     production path is t-digest with the same single-agg plan shape)."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", col)
     row = (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, where, col)
         .select(F.col(col).cast("long").alias("x"))
         .agg(
             F.count("*").alias("n_docs"),
@@ -2253,11 +2117,9 @@ def search_count(
     """Matching-document count (the 'about N results' number) as a one-row
     DataFrame — the distributed candidate plan with a count instead of
     top-k, so it composes with NOT and never materializes candidates."""
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
-        where=where,
+    return _candidates(reader, terms, mode, exclude, where).agg(
+        F.count("*").alias("n_hits")
     )
-    return cand.agg(F.count("*").alias("n_hits"))
 
 
 def more_like_this(
@@ -2350,12 +2212,8 @@ def search_facets_rollup(
     one rollup aggregation over the joined candidates; NULL subtotal
     markers coalesce to '__ALL__' for engine-neutral comparison."""
     a, b = facet_cols
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude
-    ).select("doc_id")
-    dm = reader.docmap_df().select("doc_id", a, b)
     return (
-        cand.join(dm, "doc_id")
+        _candidates(reader, terms, mode, exclude, None, a, b)
         .rollup(a, b)
         .agg(F.count("*").alias("n_docs"))
         .select(
@@ -2596,6 +2454,92 @@ def _with_tombstones(reader, excl: np.ndarray | None) -> np.ndarray | None:
     if excl is None:
         return tomb
     return np.union1d(excl, tomb)
+
+
+def _drop_tombstones(reader, df: DataFrame) -> DataFrame:
+    """Anti-join the reader's tombstoned doc_ids out of a distributed
+    (doc_id, ...) frame. Size-gated hint: tombstones are usually tiny
+    (pre-purge deltas), but a mass delete before purge can hold millions of
+    ids — forcing a broadcast there ships the whole set to every executor.
+    The reader already knows the exact count driver-side; below the gate
+    the hint skips AQE's estimation, above it plain left-anti lets AQE pick
+    (sort-merge/shuffled-hash) from runtime sizes."""
+    tomb_df = reader.tombstones_df()
+    if tomb_df is None:
+        return df
+    if reader.tombstones.size <= 5_000_000:
+        tomb_df = F.broadcast(tomb_df)
+    return df.join(tomb_df, "doc_id", "left_anti")
+
+
+def _where_ids(reader, where: dict) -> DataFrame:
+    """(doc_id) of the docmap rows matching every ``where`` predicate (A34)
+    — the semi-join side of every distributed metadata filter. The docmap
+    scan pushes the predicates down and prunes to doc_id; an unknown column
+    raises ValueError before any plan runs."""
+    from miru_spark.filters import spark_predicate
+
+    allow = reader.docmap_df()
+    for col, val in where.items():
+        if col not in allow.columns:
+            raise ValueError(f"unknown docmap column {col!r}")
+        allow = allow.filter(spark_predicate(col, val))
+    return allow.select("doc_id")
+
+
+def _candidates(reader, terms, mode, exclude, where, *cols) -> DataFrame:
+    """The candidate set every aggregation reads: the distributed plan's
+    matching doc_ids (k=None, unrounded — the score is never used) joined
+    to the docmap's (doc_id, *cols) projection, or bare (doc_id) when no
+    column is asked for. The docmap side prunes to those columns at scan
+    time; AQE picks the join strategy from the candidate set's runtime
+    size."""
+    cand = search_distributed(
+        reader, terms, mode=mode, k=None, round_digits=None, exclude=exclude,
+        where=where,
+    ).select("doc_id")
+    if not cols:
+        return cand
+    return cand.join(reader.docmap_df().select("doc_id", *cols), "doc_id")
+
+
+def _filter_matches(reader, filters, exclude, where):
+    """The A67/A106 filter-match frame: one pruned ids-only postings scan
+    over the union of the named filters' terms -> per-(doc, filter)
+    distinct-term counts -> (doc_id, fname) for every doc matching all of
+    a filter's terms. Returns (sizes, matched, live): the (fname, n_terms)
+    table, the match frame, and the live docmap ids under the same
+    exclude/tombstone/where restrictions (lazy; unused plans cost
+    nothing)."""
+    names = sorted(filters)
+    rows = [(n, t) for n in names for t in dict.fromkeys(filters[n])]
+    spark = reader.spark
+    fdf = spark.createDataFrame(rows, "fname string, term string")
+    sdf = spark.createDataFrame(
+        [(n, len(dict.fromkeys(filters[n]))) for n in names],
+        "fname string, n_terms int",
+    )
+    chunks = reader.postings_df(sorted({t for _, t in rows}))
+    ids = chunks.mapInArrow(_ids_term_arrow, _DOCID_TERM_SCHEMA)
+    live = reader.docmap_df().select("doc_id")
+    excl = _with_tombstones(reader, _exclusion_ids(reader, exclude or []))
+    if excl is not None and excl.size:
+        dead = spark.createDataFrame([(int(d),) for d in excl], "doc_id long")
+        ids = ids.join(dead, "doc_id", "left_anti")
+        live = live.join(dead, "doc_id", "left_anti")
+    if where:
+        allow = _where_ids(reader, where)
+        ids = ids.join(allow, "doc_id", "left_semi")
+        live = live.join(allow, "doc_id", "left_semi")
+    matched = (
+        ids.join(F.broadcast(fdf), "term")
+        .groupBy("doc_id", "fname")
+        .agg(F.count_distinct("term").alias("nm"))
+        .join(F.broadcast(sdf), "fname")
+        .filter(F.col("nm") == F.col("n_terms"))
+        .select("doc_id", "fname")
+    )
+    return sdf, matched, live
 
 
 def _route_query(
@@ -4678,14 +4622,7 @@ def search_distributed(
         bm25_contrib_gen(n_docs, avgdl, boost_map=boost_map), out_schema
     )
     if where:
-        from miru_spark.filters import spark_predicate
-
-        allow = reader.docmap_df()
-        for col, val in where.items():
-            if col not in allow.columns:
-                raise ValueError(f"unknown docmap column {col!r}")
-            allow = allow.filter(spark_predicate(col, val))
-        scored = scored.join(allow.select("doc_id"), "doc_id", "left_semi")
+        scored = scored.join(_where_ids(reader, where), "doc_id", "left_semi")
     if mode == "conjunctive" and len(terms) > 1:
         # rarest-term pre-filter: conjunctive hits are a subset of the
         # rarest term's postings, so semi-join every term's contributions
@@ -4709,17 +4646,7 @@ def search_distributed(
             _ids_only_arrow, _DOCID_SCHEMA
         )
         agg = agg.join(ex_ids, "doc_id", "left_anti")
-    tomb_df = reader.tombstones_df()
-    if tomb_df is not None:
-        # size-gated hint: tombstones are usually tiny (pre-purge deltas),
-        # but a mass delete before purge can hold millions of ids — forcing
-        # a broadcast there ships the whole set to every executor. The
-        # reader already knows the exact count driver-side; below the gate
-        # the hint skips AQE's estimation, above it plain left-anti lets
-        # AQE pick (sort-merge/shuffled-hash) from runtime sizes.
-        if reader.tombstones.size <= 5_000_000:
-            tomb_df = F.broadcast(tomb_df)
-        agg = agg.join(tomb_df, "doc_id", "left_anti")
+    agg = _drop_tombstones(reader, agg)
     score = (
         F.round(F.col("score"), round_digits)
         if round_digits is not None
@@ -4838,11 +4765,7 @@ def search_many_distributed(
             | (F.col("nmatch") == F.col("n_terms"))
         )
     )
-    tomb_df = reader.tombstones_df()
-    if tomb_df is not None:
-        if reader.tombstones.size <= 5_000_000:
-            tomb_df = F.broadcast(tomb_df)
-        agg = agg.join(tomb_df, "doc_id", "left_anti")
+    agg = _drop_tombstones(reader, agg)
     score = (
         F.round(F.col("score"), round_digits)
         if round_digits is not None

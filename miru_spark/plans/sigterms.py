@@ -45,14 +45,11 @@ def significant_terms(
 ) -> DataFrame:
     """(term, fg_count, bg_count, score) — top_n by (jlh desc, term)."""
     from miru_spark.functions.tokenize import tokens_col
-    from miru_spark.plans.search import search_distributed
+    from miru_spark.plans.search import _candidates
 
     if top_n <= 0 or min_doc_count < 1:
         raise ValueError("top_n must be positive and min_doc_count >= 1")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None,
-        exclude=exclude, where=where,
-    ).select("doc_id")
+    cand = _candidates(reader, terms, mode, exclude, where)
     fg_size = cand.count()
     if fg_size == 0:
         return reader.spark.createDataFrame(
@@ -153,14 +150,11 @@ def rare_terms(
     output is at most max_doc_count * |candidates| rows and the agg state
     is the (pruned) vocabulary, both bounded far below the corpus."""
     from miru_spark.functions.tokenize import tokens_col
-    from miru_spark.plans.search import search_distributed
+    from miru_spark.plans.search import _candidates
 
     if max_doc_count < 1:
         raise ValueError("max_doc_count must be >= 1")
-    cand = search_distributed(
-        reader, terms, mode=mode, k=None, round_digits=None,
-        exclude=exclude, where=where,
-    ).select("doc_id")
+    cand = _candidates(reader, terms, mode, exclude, where)
     doc_terms = (
         corpus.select(
             "doc_id", F.explode(tokens_col("content", tokenizer)).alias("term")

@@ -12,6 +12,8 @@ from miru_spark.plans.search import (
     search_count,
     search_distributed,
     search_exhaustive,
+    search_facets,
+    search_filters_agg,
     search_phrase,
     search_topk,
 )
@@ -61,6 +63,15 @@ def test_tombstones_filter_every_path(spark, del_index, reader):
         .collect()
     }
     assert n == n0 - len(dead_with_the)
+    # the aggregations read the same candidate set: facet counts and the
+    # filters agg's named and other buckets all lose exactly the dead docs
+    facets = search_facets(r, ["the"], "disjunctive").collect()
+    assert sum(x.n_docs for x in facets) == n
+    buckets = {
+        x.bucket: x.n_docs
+        for x in search_filters_agg(r, {"the": ["the"]}).collect()
+    }
+    assert buckets == {"the": n, "_other_": 500 - len(DELETED) - n}
 
 
 def test_delete_accumulates_and_validates(spark, tmp_path):

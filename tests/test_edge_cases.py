@@ -84,3 +84,27 @@ def test_unicode_prefix_and_fuzzy_expansion(edge_index):
 def test_not_excluding_every_candidate(edge_index):
     got = search_topk(edge_index, ["solo"], mode="conjunctive", k=5, exclude=["dup"])
     assert [d for d, _ in got] == [2]  # doc 6 has dup, doc 2 survives
+
+
+@pytest.mark.parametrize(
+    "terms,mode",
+    [
+        (["zzzz"], "disjunctive"),  # absent term
+        (["zzzz", "yyyy"], "conjunctive"),  # no query term in the index
+        (["the", "zzzz"], "conjunctive"),  # a present term AND an absent one
+    ],
+    ids=["absent", "none_indexed", "one_absent"],
+)
+def test_empty_candidate_set_matches_twin(reader, duck, terms, mode):
+    """A query matching nothing: MAD and string_stats return the twin's
+    row exactly — one row, count 0, the same NULL metrics."""
+    from miru_spark.plans.relational import mad_oracle_sql, string_stats_oracle_sql
+    from miru_spark.plans.search import search_mad, search_string_stats
+
+    for got, sql in (
+        (search_mad(reader, terms, mode), mad_oracle_sql(terms, mode)),
+        (search_string_stats(reader, terms, mode), string_stats_oracle_sql(terms, mode)),
+    ):
+        rows = [tuple(r) for r in got.collect()]
+        assert rows == duck.execute(sql).fetchall()
+        assert len(rows) == 1 and rows[0][0] == 0

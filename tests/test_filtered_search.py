@@ -13,8 +13,10 @@ import pytest
 
 from miru_spark.plans.search import (
     search,
+    search_adjacency_matrix,
     search_distributed,
     search_exhaustive,
+    search_filters_agg,
     search_many,
     search_near,
     search_phrase,
@@ -72,6 +74,10 @@ def test_filter_unknown_column_raises(reader):
         reader.filter_doc_ids({"nope": "x"})
     with pytest.raises(ValueError, match="unknown docmap column"):
         search_distributed(reader, ["the"], where={"nope": "x"}).collect()
+    with pytest.raises(ValueError, match="unknown docmap column"):
+        search_adjacency_matrix(reader, {"f": ["the"]}, where={"nope": "x"})
+    with pytest.raises(ValueError, match="unknown docmap column"):
+        search_filters_agg(reader, {"f": ["the"]}, where={"nope": "x"})
 
 
 @pytest.mark.parametrize("mode", ["conjunctive", "disjunctive"])

@@ -219,6 +219,11 @@ def test_histogram_pipeline_matches_bruteforce(reader, duck):
     assert got == [tuple(r) for r in exp]
     # normalize: percentages partition 100 over the FULL bucket list
     assert round(sum(t[6] for t in want), 4) == 100.0
+    # unrounded, pct_of_sum is the twin's float expression bit for bit
+    raw = search_histogram_pipeline(
+        reader, terms, mode=mode, width=width, round_digits=None
+    ).collect()
+    assert [r.pct_of_sum for r in raw] == [n * 100.0 / total for _, n in ns]
     # selector: subset rows, identical surviving metrics
     floor = sorted(n for _, n in ns)[len(ns) // 2]
     sel = [

@@ -10,6 +10,7 @@ plans survive scale-up (SURVEY.md section 4):
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from miru_spark.index.reader import IndexReader
@@ -179,8 +180,30 @@ def _anti_join_nodes(plan: str) -> list:
     ]
 
 
-def test_tombstone_join_gated_not_forced_broadcast(spark, tmp_path):
-    """Round-3 fix: the distributed scorer's tombstone exclusion only hints
+def _tombstone_gated_plans():
+    """Every distributed path whose tombstone anti-join carries the size-gated
+    broadcast hint, as reader -> DataFrame."""
+    from miru_spark.plans.booltree import search_bool_distributed
+    from miru_spark.plans.multifield import search_fields_combined
+    from miru_spark.plans.search import search_distributed, search_many_distributed
+
+    return {
+        "search_distributed": lambda r: search_distributed(
+            r, ["the"], mode="disjunctive"
+        ),
+        "search_many_distributed": lambda r: search_many_distributed(
+            r, [(["the"], "disjunctive"), (["the", "a"], "conjunctive")]
+        ),
+        "search_bool_distributed": lambda r: search_bool_distributed(r, "the"),
+        "search_fields_combined": lambda r: search_fields_combined(
+            {"content": r}, ["the"]
+        ),
+    }
+
+
+@pytest.mark.parametrize("path", sorted(_tombstone_gated_plans()))
+def test_tombstone_join_gated_not_forced_broadcast(spark, tmp_path, path):
+    """Round-3 fix: every distributed path's tombstone exclusion only hints
     a broadcast below a size gate. A synthetic >5M-id tombstone set with
     auto-broadcast disabled must fall back to a shuffle join (round 2
     force-broadcast the whole set regardless of size); a tiny set keeps the
@@ -190,9 +213,9 @@ def test_tombstone_join_gated_not_forced_broadcast(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from miru_spark.index.writer import build_index, delete_docs
-    from miru_spark.plans.search import search_distributed
     from miru_spark.schema import read_corpus
 
+    run = _tombstone_gated_plans()[path]
     p = str(tmp_path / "idx")
     build_index(spark, read_corpus(spark, SF_DIR), p, num_partitions=2)
 
@@ -202,7 +225,7 @@ def test_tombstone_join_gated_not_forced_broadcast(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         r = IndexReader(spark, p)
-        plan = _plan(search_distributed(r, ["the"], mode="disjunctive"))
+        plan = _plan(run(r))
         assert _anti_join_nodes(plan) == ["BroadcastHashJoin"]
 
         # mass delete: > gate -> no forced broadcast anywhere in the plan
@@ -222,7 +245,7 @@ def test_tombstone_join_gated_not_forced_broadcast(spark, tmp_path):
         # note: the per-term df_global join (one row per query term) keeps
         # its unconditional broadcast hint, so assert on the LeftAnti join
         # node specifically, not on BroadcastExchange anywhere in the plan
-        plan2 = _plan(search_distributed(r2, ["the"], mode="disjunctive"))
+        plan2 = _plan(run(r2))
         nodes2 = _anti_join_nodes(plan2)
         assert nodes2 and all(n != "BroadcastHashJoin" for n in nodes2)
     finally:

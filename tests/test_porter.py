@@ -95,6 +95,8 @@ def test_dict_path_token_identical_to_udf_path(spark):
         (1, "generalization generalizations controlling"),
         (2, "the hopefulness of adjustable adjustment is"),
         (3, "oscillators oscillating controlled hopeful"),
+        (4, ""),  # empty doc
+        (5, "The of AND is"),  # every token a stopword
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, content string")
     udf_toks = {
@@ -112,6 +114,8 @@ def test_dict_path_token_identical_to_udf_path(spark):
         ).collect()
     }
     assert dict_toks == udf_toks
+    # zero-token docs survive the dictionary path with empty content
+    assert udf_toks[4] == udf_toks[5] == []
     # and the stemming genuinely changed something
     assert udf_toks[0] == ["run", "relat", "troubl", "troubl"]
 
