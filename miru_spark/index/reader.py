@@ -9,7 +9,15 @@ built lazily for one ``term_pref`` partition the first time a query touches
 it, from that partition's ``term`` and ``bucket`` columns, and cached with
 each file's parquet footer. A query then reads only the row groups its terms live in
 and ``take``s their rows — no dataset discovery or filter scan per query.
-Everything else is tiny (stats.json, df rows for <=10 query terms).
+The same pass sums each term's ``df_chunk``, so the distributed scorers
+read a term's global df driver-side too. Everything else is tiny
+(stats.json, df rows for <=10 query terms).
+
+A reader is a point-in-time view of the index it opened: its corpus stats,
+tombstones, terms index, and the Spark relations ``postings_df`` and
+``docmap_df`` filter (one of each, built on first use and listed once)
+stay those of the moment they were read. Open a new reader to see later
+commits.
 """
 
 from __future__ import annotations
@@ -69,11 +77,13 @@ class _TermLocator:
     partition's ``term`` and ``bucket`` columns (a term's locations are
     kept in bucket order); each file's parquet footer (``FileMetaData``)
     is cached beside it so a query reopens a file without re-parsing the
-    footer. No file handle outlives a call. The partition build runs under
-    a lock: a reader is shared by threads, and a partition is published
-    only once complete. Memory is O(terms in the partitions touched so
-    far) — the committed vocabulary at worst, the same class as Lucene's
-    in-memory terms index.
+    footer. No file handle outlives a call. The same pass sums each term's
+    ``df_chunk`` over the partition's rows: the term's global df over
+    exactly the rows a scan of its partition reads. The partition build
+    runs under a lock: a reader is shared by threads, and a partition
+    (locations and dfs) is published only once complete. Memory is
+    O(terms in the partitions touched so far) — the committed vocabulary
+    at worst, the same class as Lucene's in-memory terms index.
     """
 
     def __init__(self, partition_files):
@@ -81,6 +91,7 @@ class _TermLocator:
         self._lock = threading.Lock()
         self._parts: dict[int, dict[str, list[tuple[int, int, int]]]] = {}
         self._files: list[tuple] = []  # file index -> (path, FileMetaData)
+        self._df: dict[str, int] = {}  # term -> sum of its df_chunk
 
     def _partition(self, pref: int) -> dict[str, list[tuple[int, int, int]]]:
         part = self._parts.get(pref)
@@ -92,24 +103,39 @@ class _TermLocator:
             part = self._parts.get(pref)
             if part is None:
                 found: dict[str, list] = {}
+                dfs: dict[str, int] = {}
                 for path in self._partition_files(pref):
                     with pq.ParquetFile(path) as pf:
                         fi = len(self._files)
                         self._files.append((path, pf.metadata))
                         for rg in range(pf.num_row_groups):
-                            t = pf.read_row_group(rg, columns=["term", "bucket"])
-                            for row, (term, bucket) in enumerate(
-                                zip(t.column(0).to_pylist(), t.column(1).to_pylist())
+                            t = pf.read_row_group(
+                                rg, columns=["term", "bucket", "df_chunk"]
+                            )
+                            for row, (term, bucket, df) in enumerate(
+                                zip(*(c.to_pylist() for c in t.columns))
                             ):
                                 found.setdefault(term, []).append(
                                     (bucket, fi, rg, row)
                                 )
+                                dfs[term] = dfs.get(term, 0) + df
                 part = {
                     term: [loc[1:] for loc in sorted(locs)]
                     for term, locs in found.items()
                 }
+                self._df.update(dfs)
                 self._parts[pref] = part
         return part
+
+    def dfs(self, terms) -> dict[str, int]:
+        """Global df of each distinct present term, in first-seen order:
+        its ``df_chunk`` summed over every chunk row of the view. Absent
+        terms are absent from the result."""
+        return {
+            t: self._df[t]
+            for t in dict.fromkeys(terms)
+            if t in self._partition(term_pref_py(t))
+        }
 
     def read(self, terms, columns: list[str]):
         """The chunk rows of ``terms`` as one arrow table ordered by (term,
@@ -261,7 +287,6 @@ class IndexReader:
 
         self.spark = spark
         self.index_path = index_path
-        self._snapmod = snapmod
         # roll forward a purge swap a previous process crashed mid-way
         # through (no-op unless the sentinel file exists)
         complete_purge_swap(index_path)
@@ -283,15 +308,21 @@ class IndexReader:
         # written later must not leak into it
         self._pinned_snapshot = snapshot_id is not None
         self._locator = _TermLocator(self._partition_files)
+        # the postings and docmap relations, each built on first use
+        self._relations_lock = threading.Lock()
+        self._postings: DataFrame | None = None
+        self._docmap: DataFrame | None = None
 
     # -------------------------------------------------------------- scans --
     def _partition_files(self, pref: int) -> list[str]:
         """Data files of one term_pref partition: the snapshot's manifest
         entries for it, or the files in its directory."""
         if self.snapshot is not None:
-            return self._snapmod.snapshot_files(
-                self.index_path, self.snapshot["id"], [pref]
-            )
+            return [
+                os.path.join(self.index_path, p)
+                for p, fpref in self.snapshot["files"].items()
+                if fpref == pref
+            ]
         d = f"{self.index_path}/postings/term_pref={pref}"
         if not os.path.isdir(d):
             return []
@@ -302,23 +333,32 @@ class IndexReader:
         ]
 
     def postings_df(self, terms: list[str] | None = None) -> DataFrame:
-        prefs = None if terms is None else sorted({term_pref_py(t) for t in terms})
-        if self.snapshot is not None:
-            files = self._snapmod.snapshot_files(
-                self.index_path, self.snapshot["id"], prefs
-            )
-            if not files:
-                return self._empty_postings_df()
-            df = self.spark.read.option(
-                "basePath", f"{self.index_path}/postings"
-            ).parquet(*files)
-            if terms is not None:
-                df = df.filter(F.col("term").isin(terms))
-            return df
-        df = self.spark.read.parquet(f"{self.index_path}/postings")
-        if terms is not None:
-            df = df.filter(F.col("term_pref").isin(prefs) & F.col("term").isin(terms))
-        return df
+        """The chunk rows of ``terms`` (all rows when None) as a Spark
+        DataFrame: the reader's one postings relation filtered on
+        ``term_pref`` (partition pruning) and ``term IN`` (a pushed parquet
+        filter). The relation — the postings directory, or every data file
+        of the reader's snapshot — is listed and its schema read once, on
+        first use, so later calls launch no Spark job. Like the rest of the
+        reader it is a point-in-time view: files committed after that first
+        use are not seen; open a new reader for them."""
+        with self._relations_lock:
+            if self._postings is None:
+                self._postings = self._postings_relation()
+        if terms is None:
+            return self._postings
+        prefs = sorted({term_pref_py(t) for t in terms})
+        return self._postings.filter(
+            F.col("term_pref").isin(prefs) & F.col("term").isin(terms)
+        )
+
+    def _postings_relation(self) -> DataFrame:
+        if self.snapshot is None:
+            return self.spark.read.parquet(f"{self.index_path}/postings")
+        if not self.snapshot["files"]:
+            return self._empty_postings_df()
+        return self.spark.read.option(
+            "basePath", f"{self.index_path}/postings"
+        ).parquet(*(os.path.join(self.index_path, p) for p in self.snapshot["files"]))
 
     def _empty_postings_df(self) -> DataFrame:
         from pyspark.sql import types as T
@@ -370,9 +410,20 @@ class IndexReader:
         return self._tombstones_df
 
     def docmap_df(self) -> DataFrame:
-        # a purge commit records its own docmap version in the snapshot;
-        # pre-purge snapshots keep reading the original (full) docmap
-        return self.spark.read.parquet(f"{self.index_path}/{self._docmap_dir()}")
+        """The docmap as a Spark DataFrame: one relation per reader, built
+        on first use with the schema of the pyarrow dataset the reader
+        already opens, so no call — the first included — launches a Spark
+        job. A point-in-time view like ``postings_df``: a purge commit
+        records its own docmap version in the snapshot, and pre-purge
+        snapshots keep reading the original (full) docmap."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        with self._relations_lock:
+            if self._docmap is None:
+                self._docmap = self.spark.read.schema(
+                    from_arrow_schema(self._docmap_dset().schema)
+                ).parquet(f"{self.index_path}/{self._docmap_dir()}")
+        return self._docmap
 
     def _docmap_dir(self) -> str:
         if self.snapshot is not None:
@@ -593,6 +644,14 @@ class IndexReader:
                 f"{len(out)} terms (max_terms={max_terms})"
             )
         return out
+
+    def chunk_dfs(self, terms) -> dict[str, int]:
+        """Global df of each distinct query term present in this reader's
+        view, in first-seen order: the terms index's sum of the term's
+        ``df_chunk`` over exactly the chunk rows ``postings_df(terms)``
+        scans, so it is exact per snapshot (``term_dfs`` reads one df table
+        shared by every snapshot). Driver-side; no Spark job."""
+        return self._locator.dfs(terms)
 
     def term_dfs(self, terms) -> dict[str, int]:
         """Document frequencies for a handful of terms — one pushed-down

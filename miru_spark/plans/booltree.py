@@ -802,9 +802,15 @@ def search_bool_distributed(
     terms, phrases = _leaf_terms(node)
     n_docs = float(reader.n_docs)
     avgdl = float(reader.avgdl)
-    chunks = reader.postings_df(terms)
-    term_df = chunks.groupBy("term").agg(F.sum("df_chunk").alias("df_global"))
-    chunks = chunks.join(F.broadcast(term_df), "term")
+
+    from miru_spark.plans.search import (
+        _drop_tombstones,
+        _postings_with_df,
+        _where_ids,
+        bm25_contrib_gen,
+    )
+
+    chunks, term_dfs = _postings_with_df(reader, terms)
 
     # windowed tree block-max prune (_tree_blockmax_prune): feasibility/
     # liveness pruning is unconditionally sound; the theta criterion is
@@ -816,7 +822,6 @@ def search_bool_distributed(
     LAST_TREE_PRUNE_STATS = {}
     if not phrases:
         gate = _TREE_PRUNE_MIN_POSTINGS if prune_gate is None else prune_gate
-        term_dfs = reader.term_dfs(terms)
         if term_dfs and sum(term_dfs.values()) >= gate:
             tomb = reader.tombstones
             allow_theta = (
@@ -827,12 +832,6 @@ def search_bool_distributed(
             chunks, LAST_TREE_PRUNE_STATS = _tree_blockmax_prune(
                 chunks, node, k, n_docs, avgdl, round_digits, allow_theta
             )
-
-    from miru_spark.plans.search import (
-        _drop_tombstones,
-        _where_ids,
-        bm25_contrib_gen,
-    )
 
     scored = chunks.mapInArrow(
         bm25_contrib_gen(n_docs, avgdl, emit_term=True), _SCORED_SCHEMA

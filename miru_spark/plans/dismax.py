@@ -160,7 +160,11 @@ def search_fields_dismax_distributed(
     (doc_id, field) = per-field subquery score + distinct-term match count
     -> per-field AND filter (conjunctive) -> hash agg by doc_id for the
     max + tie_breaker * rest combine. Both aggs partial-combine map-side."""
-    from miru_spark.plans.search import _where_ids, bm25_contrib_gen
+    from miru_spark.plans.search import (
+        _postings_with_df,
+        _where_ids,
+        bm25_contrib_gen,
+    )
 
     if mode not in ("disjunctive", "conjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -181,11 +185,7 @@ def search_fields_dismax_distributed(
         n_docs = float(reader.n_docs)
         avgdl = float(reader.avgdl)
         weight = w[fname]
-        chunks = reader.postings_df(terms)
-        term_df = chunks.groupBy("term").agg(
-            F.sum("df_chunk").alias("df_global")
-        )
-        chunks = chunks.join(F.broadcast(term_df), "term")
+        chunks, _ = _postings_with_df(reader, terms)
         score_chunks = bm25_contrib_gen(
             n_docs, avgdl, weight=weight, emit_term=True, field_tag=fname
         )

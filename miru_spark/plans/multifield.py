@@ -431,7 +431,11 @@ def search_fields_distributed(
     decode+score (weighted) -> UNION -> one hash agg by doc_id.
     Conjunctive counts DISTINCT matched terms across fields, so a term
     present in several fields satisfies the requirement once."""
-    from miru_spark.plans.search import _where_ids, bm25_contrib_gen
+    from miru_spark.plans.search import (
+        _postings_with_df,
+        _where_ids,
+        bm25_contrib_gen,
+    )
 
     terms = list(dict.fromkeys(terms))
     if not terms:
@@ -449,11 +453,7 @@ def search_fields_distributed(
         n_docs = float(reader.n_docs)
         avgdl = float(reader.avgdl)
         weight = w[fname]
-        chunks = reader.postings_df(terms)
-        term_df = chunks.groupBy("term").agg(
-            F.sum("df_chunk").alias("df_global")
-        )
-        chunks = chunks.join(F.broadcast(term_df), "term")
+        chunks, _ = _postings_with_df(reader, terms)
         score_chunks = bm25_contrib_gen(
             n_docs, avgdl, weight=weight, emit_term=True
         )

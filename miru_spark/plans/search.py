@@ -2472,6 +2472,20 @@ def _drop_tombstones(reader, df: DataFrame) -> DataFrame:
     return df.join(tomb_df, "doc_id", "left_anti")
 
 
+def _postings_with_df(reader, terms) -> tuple[DataFrame, dict[str, int]]:
+    """The pruned ``postings_df(terms)`` scan with each chunk row's global
+    df attached as ``df_global`` — a literal (term -> df) map lookup — and
+    that map. The dfs come from the reader's terms index
+    (``chunk_dfs``): driver-side, exact for the reader's view, and no
+    aggregate, broadcast or Spark job in the plan."""
+    dfs = reader.chunk_dfs(terms)
+    pairs = [c for t, d in dfs.items() for c in (F.lit(t), F.lit(d))]
+    # an empty map cannot be indexed by a string; no row reads it anyway
+    df_col = F.create_map(*pairs)[F.col("term")] if pairs else F.lit(None)
+    chunks = reader.postings_df(terms)
+    return chunks.withColumn("df_global", df_col.cast("long")), dfs
+
+
 def _where_ids(reader, where: dict) -> DataFrame:
     """(doc_id) of the docmap rows matching every ``where`` predicate (A34)
     — the semi-join side of every distributed metadata filter. The docmap
@@ -4545,10 +4559,7 @@ def search_distributed(
     exclude = _check_exclude(terms, exclude)
     n_docs = float(reader.n_docs)
     avgdl = float(reader.avgdl)
-    chunks = reader.postings_df(terms)
-    # global df per term (sum over chunk rows), joined back (tiny, broadcast)
-    term_df = chunks.groupBy("term").agg(F.sum("df_chunk").alias("df_global"))
-    chunks = chunks.join(F.broadcast(term_df), "term")
+    chunks, dfs = _postings_with_df(reader, terms)
 
     out_schema = T.StructType(
         [
@@ -4577,23 +4588,20 @@ def search_distributed(
         # exclude/where/tombstones remove docs post-agg, which would break
         # the "k docs reach theta" guarantee, so those paths stay unpruned.
         # Gate on the TOTAL postings volume across present terms
-        # (driver-side term dictionary — a pyarrow seek, no Spark job):
+        # (the dfs attached above — driver-side, no Spark job):
         # the windowed bound can prune ANY term's chunks wherever the
         # stacked coverage is weak (not just the score-dominant term, the
         # sum-UB-era rationale for a min-df gate), so the right question
         # is whether the prunable decode volume can repay the metadata
         # job — which scales with the summed df.
         gate = _PRUNE_MIN_POSTINGS if prune_gate is None else prune_gate
-        dfs_dict = reader.term_dfs(terms)
-        if dfs_dict and sum(dfs_dict.values()) >= gate:
+        if dfs and sum(dfs.values()) >= gate:
             chunks, LAST_PRUNE_STATS = _blockmax_prune(
                 chunks, k, n_docs, avgdl, boost_map, round_digits
             )
 
     rare = None
-    dfs: dict[str, int] = {}
     if mode == "conjunctive" and len(terms) > 1:
-        dfs = {r["term"]: r["df_global"] for r in term_df.collect()}
         if not dfs:  # no query term exists in the index
             return reader.spark.createDataFrame([], "doc_id long, score double")
         rare = min(dfs, key=dfs.get)
@@ -4713,9 +4721,7 @@ def search_many_distributed(
     n_docs = float(reader.n_docs)
     avgdl = float(reader.avgdl)
     all_terms = list(dict.fromkeys(t for terms, _ in queries for t in terms))
-    chunks = reader.postings_df(all_terms)
-    term_df = chunks.groupBy("term").agg(F.sum("df_chunk").alias("df_global"))
-    chunks = chunks.join(F.broadcast(term_df), "term")
+    chunks, term_dfs = _postings_with_df(reader, all_terms)
 
     global LAST_PRUNE_STATS
     LAST_PRUNE_STATS = {}
@@ -4724,7 +4730,6 @@ def search_many_distributed(
         # batch theta chunk skipping: one shared metadata job, per-query
         # thresholds, keep-if-any-query-needs-it (_batch_blockmax_prune).
         # Tombstones disable it exactly as on the single-query path.
-        term_dfs = reader.term_dfs(all_terms)
         if any(
             m == "disjunctive"
             and (p := [t for t in dict.fromkeys(ts) if t in term_dfs])

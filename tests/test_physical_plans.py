@@ -147,6 +147,42 @@ def test_prefix_expansion_runs_no_spark_job(spark, index_path):
     assert before == after
 
 
+def test_warm_reader_plans_without_spark_jobs(spark, index_path):
+    """A reader plans from what it holds: once one distributed query has
+    warmed it, ``postings_df`` runs zero Spark jobs, and so does
+    ``docmap_df`` — its first call included. No distributed scorer
+    aggregates ``df_chunk``: ``df_global`` comes from the terms index."""
+    import re
+
+    from miru_spark.plans.booltree import search_bool_distributed
+    from miru_spark.plans.dismax import search_fields_dismax_distributed
+    from miru_spark.plans.multifield import search_fields_distributed
+    from miru_spark.plans.search import search_distributed, search_many_distributed
+
+    reader = IndexReader(spark, index_path)
+    search_distributed(reader, ["join", "hash"]).collect()
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    reader.postings_df(["the", "join", "zz_absent"])
+    reader.postings_df(["hash"])
+    reader.docmap_df()
+    reader.docmap_df().select("doc_id", "doc_len")
+    assert tracker.getJobIdsForGroup(None) == before
+
+    plans = [
+        search_distributed(reader, ["join", "hash"], mode="conjunctive"),
+        search_distributed(reader, ["the", "join"], mode="disjunctive"),
+        search_many_distributed(
+            reader, [(["the"], "disjunctive"), (["join", "hash"], "conjunctive")]
+        ),
+        search_bool_distributed(reader, "the"),
+        search_fields_dismax_distributed({"body": reader}, ["the", "join"]),
+        search_fields_distributed({"body": reader}, ["the", "join"]),
+    ]
+    for df in plans:
+        assert not re.search(r"sum\(df_chunk", _plan(df))
+
+
 def test_minhash_lsh_verify_has_no_forced_broadcast(spark):
     """The LSH candidate-doc semi-join must not carry a broadcast HINT:
     with auto-broadcast off the plan falls back to a shuffle join (a forced

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from miru_spark.index import snapshots as snapmod
 from miru_spark.index.reader import IndexReader
 from miru_spark.index.writer import build_index
-from miru_spark.plans.search import search_topk
+from miru_spark.plans.search import search_distributed, search_topk
 from miru_spark.schema import read_corpus
 from tests.conftest import SF_DIR, fetched_rows, scanned_rows
 
@@ -109,6 +109,9 @@ def test_snapshot_time_travel(spark, snap_stream_idx):
     for terms, mode in [(["join", "hash"], "conjunctive"), (["the", "dup"], "disjunctive")]:
         assert search_topk(old, terms, mode=mode, k=10) == search_topk(
             ref, terms, mode=mode, k=10
+        )
+        assert search_distributed(old, terms, mode=mode).collect() == (
+            search_distributed(ref, terms, mode=mode).collect()
         )
     # and the current snapshot differs (the new docs changed the corpus)
     assert cur.stats != old.stats

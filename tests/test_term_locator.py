@@ -14,7 +14,7 @@ import pyarrow.parquet as pq
 
 from miru_spark.index import snapshots as snapmod
 from miru_spark.index.reader import IndexReader
-from miru_spark.plans.search import search_topk
+from miru_spark.plans.search import search_distributed, search_facets, search_topk
 from tests.conftest import SF_DIR, fetched_rows, scanned_rows
 
 
@@ -86,6 +86,51 @@ def test_shared_reader_threads_match_sequential(spark, index_path):
     for q, results in got.items():
         assert all(r == want[q] for r in results), queries[q]
     # each partition was built once: no file footer cached twice
+    paths = [p for p, _ in shared._locator._files]
+    assert len(paths) == len(set(paths))
+
+
+def test_shared_reader_distributed_threads_match_sequential(spark, index_path):
+    """Eight threads share one fresh reader, so its postings relation, its
+    docmap relation and its terms-index dfs are all first built
+    concurrently; each thread's distributed top-k and facet counts equal a
+    sequential run, with no errors."""
+    vocab = _vocab(index_path)
+    rng = random.Random(11)
+    queries = [
+        (rng.sample(vocab, rng.randint(1, 3)), ("conjunctive", "disjunctive")[i % 2])
+        for i in range(8)
+    ]
+
+    def serve(reader, terms, mode):
+        return (
+            search_distributed(reader, terms, mode=mode).collect(),
+            sorted(search_facets(reader, terms, mode, facet_col="lang").collect()),
+        )
+
+    seq_reader = IndexReader(spark, index_path)
+    want = [serve(seq_reader, t, m) for t, m in queries]
+
+    shared = IndexReader(spark, index_path)
+    start = threading.Barrier(len(queries))
+    got: dict[int, tuple] = {}
+    errors: list[Exception] = []
+
+    def work(i: int) -> None:
+        try:
+            start.wait()
+            got[i] = serve(shared, *queries[i])
+        except Exception as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(i,)) for i in range(len(queries))]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert [got[i] for i in range(len(queries))] == want
     paths = [p for p, _ in shared._locator._files]
     assert len(paths) == len(set(paths))
 
