@@ -6,8 +6,8 @@ on executors; they never touch Spark APIs themselves.
 
 Varint: classic LEB128 (Williams & Zobel 1999) — 7 value bits per byte, high
 bit = continuation. Encoding is done column-wise over the whole array (<= 10
-vector ops); decoding splits the byte stream on terminal bytes and reduces
-per-byte contributions with ``np.bitwise_or.at``.
+vector ops); decoding splits the byte stream on terminal bytes and sums
+per-byte contributions with one ``np.add.reduceat`` over value starts.
 
 PFOR: PForDelta-style (Zukowski et al., ICDE 2006) 128-int blocks. Each block
 picks the smallest bit width ``b`` whose overflow ("exception") count is
@@ -92,16 +92,17 @@ def varint_decode(buf: bytes | memoryview | np.ndarray, offset: int = 0, count: 
     if n == 0:
         return np.empty(0, dtype=np.uint64), 0
     consumed = int(ends[-1]) + 1
+    terminal = terminal[:consumed]
     starts = np.empty(n, dtype=np.int64)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    idx = np.arange(consumed, dtype=np.int64)
-    value_id = np.searchsorted(ends, idx)  # which value each byte belongs to
-    pos = idx - starts[value_id]
-    contrib = (raw[:consumed].astype(np.uint64) & np.uint64(0x7F)) << (np.uint64(7) * pos.astype(np.uint64))
-    out = np.zeros(n, dtype=np.uint64)
-    np.bitwise_or.at(out, value_id, contrib)
-    return out, consumed
+    # value id of each byte = values ended before it; its 7-bit group sits
+    # at 7 * (byte index - value start). The groups of one value never
+    # overlap, so summing them in uint64 equals OR-ing them, exactly.
+    value_id = np.cumsum(terminal) - terminal
+    shift = (np.arange(consumed) - starts[value_id]).astype(np.uint64)
+    contrib = (raw[:consumed] & 0x7F).astype(np.uint64) << (np.uint64(7) * shift)
+    return np.add.reduceat(contrib, starts), consumed
 
 
 # ------------------------------------------------------------------ pfor ----

@@ -5,19 +5,24 @@ are parquet files partitioned by ``term_pref`` (a hash of the term), so
 every file spans nearly the whole vocabulary and file-level term min/max
 statistics prune nothing. Instead each reader keeps a terms index (Lucene's
 in-memory terms index is the model): ``term -> [(file, row group, row)]``,
-built lazily for one ``term_pref`` partition the first time a query touches
-it, from that partition's ``term`` and ``bucket`` columns, and cached with
-each file's parquet footer. A query then reads only the row groups its terms live in
-and ``take``s their rows — no dataset discovery or filter scan per query.
-The same pass sums each term's ``df_chunk``, so the distributed scorers
-read a term's global df driver-side too. Everything else is tiny
-(stats.json, df rows for <=10 query terms).
+built lazily for one ``term_pref`` partition the first time a query
+touches it, from that partition's ``term`` and ``bucket`` columns, and
+cached with each file's parquet footer. Beside it the reader holds the
+chunk rows themselves: the first fetch that touches a row group reads it
+once and materialises its rows as the dicts ``fetch_terms`` returns, so
+every later fetch is a dict lookup — no parquet read, ``take`` or
+per-query materialisation. At most ``_RESIDENT_BYTES`` (128 MiB of blob
+bytes plus numpy bytes) stay resident per reader; past it the row groups
+loaded first are evicted first. The same terms-index pass sums each
+term's ``df_chunk``, so the distributed scorers read a term's global df
+driver-side too. Everything else is tiny (stats.json, df rows for <=10
+query terms).
 
 A reader is a point-in-time view of the index it opened: its corpus stats,
-tombstones, terms index, and the Spark relations ``postings_df`` and
-``docmap_df`` filter (one of each, built on first use and listed once)
-stay those of the moment they were read. Open a new reader to see later
-commits.
+tombstones, terms index, resident chunk rows, and the Spark relations
+``postings_df`` and ``docmap_df`` filter (one of each, built on first use
+and listed once) stay those of the moment they were read. Open a new
+reader to see later commits.
 """
 
 from __future__ import annotations
@@ -36,62 +41,140 @@ from miru_spark.index.format import impact_bound
 from miru_spark.index.writer import term_pref_py
 
 
-def _relaxed(schema):
-    """The same arrow schema with every field (recursively) nullable.
+# Bytes of materialised chunk rows one reader keeps resident: blob (and
+# pos_blob) bytes plus numpy ``nbytes``, counted when a row group is
+# loaded. Past it, the row groups loaded first are evicted first.
+_RESIDENT_BYTES = 128 << 20
 
-    A full build's mapInArrow schema declares the chunk columns non-null
-    ("required" in parquet), but the delta-merge finalize routes carried
-    rows through unionByName + localCheckpoint, which relaxes them to
-    "optional" — so an incrementally-updated index legitimately mixes
-    required- and optional-field files in one postings dataset. Tables
-    read from both generations cannot be concatenated as they are; cast
-    to the relaxed schema they can (nullability is layout metadata here,
-    never semantics).
-    """
-    import pyarrow as pa
+# chunk columns the driver fetch materializes (pos_blob only on request)
+_FETCH_COLUMNS = [
+    "term", "bucket", "codec", "df_chunk", "blob", "i_tf", "i_dl", "blocks"
+]
 
-    def relax(t):
-        if pa.types.is_struct(t):
-            return pa.struct(
-                [pa.field(f.name, relax(f.type), nullable=True) for f in t]
-            )
-        if pa.types.is_list(t):
-            vf = t.value_field
-            return pa.list_(pa.field(vf.name, relax(vf.type), nullable=True))
-        if pa.types.is_large_list(t):
-            vf = t.value_field
-            return pa.large_list(
-                pa.field(vf.name, relax(vf.type), nullable=True)
-            )
-        return t
 
-    return pa.schema(
-        [pa.field(f.name, relax(f.type), nullable=True) for f in schema]
+def _chunk_rows(tbl, avgdl: float, with_positions: bool) -> tuple[list, int]:
+    """A table's chunk rows as the dicts ``fetch_terms`` hands out, in table
+    order, and their resident bytes (blob bytes plus numpy ``nbytes``).
+
+    Column-wise materialization: per-block metadata stays numpy (one
+    flatten of the arrow list<struct> column) instead of ~blocks-many
+    Python dicts; a row keeps only scalars, its blob bytes and numpy views,
+    plus the per-block ``best`` bounds baked under ``avgdl``."""
+    from miru_spark.index.format import best_block_scores
+
+    terms_l = tbl.column("term").to_pylist()
+    buckets = tbl.column("bucket").to_pylist()
+    codecs = tbl.column("codec").to_pylist()
+    dfs = tbl.column("df_chunk").to_pylist()
+    blobs = tbl.column("blob").to_pylist()
+    itf_rows = tbl.column("i_tf").to_pylist()
+    idl_rows = tbl.column("i_dl").to_pylist()
+    pos_blobs = tbl.column("pos_blob").to_pylist() if with_positions else None
+    bcol = tbl.column("blocks").combine_chunks()
+    row_off = bcol.offsets.to_numpy().astype(np.int64)
+    sv = bcol.values
+    n_np = sv.field("n").to_numpy().astype(np.int64)
+    last_np = sv.field("last_docid").to_numpy().astype(np.int64)
+    og = sv.field("off_g").to_numpy().astype(np.int64)
+    ot = sv.field("off_t").to_numpy().astype(np.int64)
+    od = sv.field("off_d").to_numpy().astype(np.int64)
+    names = {f.name for f in sv.type}
+    op = (
+        sv.field("off_p").to_numpy().astype(np.int64)
+        if "off_p" in names
+        else np.full(n_np.size, -1, dtype=np.int64)
     )
+    # sv is a StructArray: .field() returns plain (non-chunked) arrays
+    fitf = sv.field("i_tf")
+    fr_off_all = fitf.offsets.to_numpy().astype(np.int64)
+    fr_tf_all = fitf.values.to_numpy().astype(np.int64)
+    fr_dl_all = sv.field("i_dl").values.to_numpy().astype(np.int64)
+    rows, nbytes = [], 0
+    for i in range(tbl.num_rows):
+        lo, hi = int(row_off[i]), int(row_off[i + 1])
+        flo, fhi = int(fr_off_all[lo]), int(fr_off_all[hi])
+        fr_off = fr_off_all[lo : hi + 1] - flo
+        bm_meta = {
+            "n": n_np[lo:hi],
+            "last": last_np[lo:hi],
+            "off_g": og[lo:hi],
+            "off_t": ot[lo:hi],
+            "off_d": od[lo:hi],
+            "off_p": op[lo:hi],
+            # frontier views + the avgdl the bounds were baked under, so
+            # block_arrays can re-derive exact bounds under OTHER stats
+            "fr_off": fr_off,
+            "fr_tf": fr_tf_all[flo:fhi],
+            "fr_dl": fr_dl_all[flo:fhi],
+            "avgdl": avgdl,
+            "best": best_block_scores(
+                fr_off, fr_tf_all[flo:fhi], fr_dl_all[flo:fhi], avgdl
+            ),
+        }
+        r = {
+            "term": terms_l[i],
+            "bucket": buckets[i],
+            "codec": codecs[i],
+            "df_chunk": dfs[i],
+            "blob": blobs[i],
+            "i_tf": itf_rows[i],
+            "i_dl": idl_rows[i],
+            "bm": bm_meta,
+        }
+        nbytes += len(blobs[i]) + sum(
+            v.nbytes for v in bm_meta.values() if isinstance(v, np.ndarray)
+        )
+        if with_positions:
+            r["pos_blob"] = pos_blobs[i]
+            nbytes += len(pos_blobs[i] or b"")
+        rows.append(r)
+    return rows, nbytes
 
 
 class _TermLocator:
-    """The driver fetch's terms index: ``term -> [(file, row group, row)]``.
+    """The driver fetch's terms index, ``term -> [(file, row group, row)]``,
+    and the chunk rows it points at, held resident.
 
-    Built lazily, one ``term_pref`` partition at a time, from that
-    partition's ``term`` and ``bucket`` columns (a term's locations are
-    kept in bucket order); each file's parquet footer (``FileMetaData``)
-    is cached beside it so a query reopens a file without re-parsing the
-    footer. No file handle outlives a call. The same pass sums each term's
-    ``df_chunk`` over the partition's rows: the term's global df over
-    exactly the rows a scan of its partition reads. The partition build
-    runs under a lock: a reader is shared by threads, and a partition
-    (locations and dfs) is published only once complete. Memory is
-    O(terms in the partitions touched so far) — the committed vocabulary
-    at worst, the same class as Lucene's in-memory terms index.
+    Locations are built lazily, one ``term_pref`` partition at a time, from
+    that partition's ``term`` and ``bucket`` columns (a term's locations
+    are kept in bucket order); each file's parquet footer (``FileMetaData``)
+    is cached beside them. The same pass sums each term's ``df_chunk`` over
+    the partition's rows: the term's global df over exactly the rows a scan
+    of its partition reads. Memory is O(terms in the partitions touched so
+    far), the same class as Lucene's in-memory terms index.
+
+    Chunk rows are materialised per (file, row group, ``with_positions``):
+    the first fetch that touches a row group reads it whole, closes the
+    file at once, builds the rows ``fetch_terms`` hands out (scalars, blob
+    bytes, numpy block views, ``best`` bounds under the reader's avgdl)
+    and keeps them. Later fetches look them up. A row group is the unit
+    because it is the smallest parquet read: first touch reads no more
+    than a seek would, and a large file is never read whole for one term.
+    Rows are shared by every fetch and never mutated; nothing but the
+    loader writes a row key. At most ``_RESIDENT_BYTES`` stay resident per
+    reader, evicting the row groups loaded first; one bigger than that on
+    its own is served without being kept. Because each row group is
+    materialised on its own, files of different layout generations
+    (required- and optional-field schemas) never meet in one table.
+
+    Partitions and row groups are built under one lock and published only
+    once complete, so a reader shared by threads builds each at most once
+    while it stays resident; a hit is a lock-free dict ``get``. No file handle
+    outlives a call, and the rows are a point-in-time view like the rest
+    of the reader.
     """
 
-    def __init__(self, partition_files):
+    def __init__(self, partition_files, avgdl: float):
         self._partition_files = partition_files  # term_pref -> [paths]
+        self._avgdl = avgdl
         self._lock = threading.Lock()
         self._parts: dict[int, dict[str, list[tuple[int, int, int]]]] = {}
         self._files: list[tuple] = []  # file index -> (path, FileMetaData)
         self._df: dict[str, int] = {}  # term -> sum of its df_chunk
+        # (file index, row group, with_positions) -> (rows, bytes), in
+        # load order
+        self._rows: dict[tuple[int, int, bool], tuple[list, int]] = {}
+        self._held = 0  # resident bytes: sum over self._rows
 
     def _partition(self, pref: int) -> dict[str, list[tuple[int, int, int]]]:
         part = self._parts.get(pref)
@@ -137,40 +220,43 @@ class _TermLocator:
             if t in self._partition(term_pref_py(t))
         }
 
-    def read(self, terms, columns: list[str]):
-        """The chunk rows of ``terms`` as one arrow table ordered by (term,
-        bucket), or None when no row matches. Duplicate terms are read
-        once; absent terms contribute nothing. Only the row groups holding
-        a query term are read, and one ``take`` picks the rows out."""
-        import pyarrow as pa
+    def rows(self, terms, with_positions: bool) -> list[dict]:
+        """The resident chunk rows of ``terms``, ordered by (term, bucket).
+        Duplicate terms are looked up once; absent terms contribute
+        nothing."""
+        groups: dict[tuple[int, int], list] = {}
+        out = []
+        for t in sorted(set(terms)):
+            for fi, rg, row in self._partition(term_pref_py(t)).get(t, ()):
+                rows = groups.get((fi, rg))
+                if rows is None:
+                    rows = self._group_rows(fi, rg, with_positions)
+                    groups[fi, rg] = rows
+                out.append(rows[row])
+        return out
+
+    def _group_rows(self, fi: int, rg: int, with_positions: bool) -> list:
+        key = (fi, rg, with_positions)
+        hit = self._rows.get(key)
+        if hit is not None:
+            return hit[0]
         import pyarrow.parquet as pq
 
-        locs = [
-            loc
-            for t in sorted(set(terms))
-            for loc in self._partition(term_pref_py(t)).get(t, ())
-        ]
-        if not locs:
-            return None
-        groups: dict[int, set[int]] = {}
-        for fi, rg, _ in locs:
-            groups.setdefault(fi, set()).add(rg)
-        tables, start, at = [], {}, 0
-        for fi in sorted(groups):
+        with self._lock:
+            hit = self._rows.get(key)
+            if hit is not None:
+                return hit[0]
             path, md = self._files[fi]
-            rgs = sorted(groups[fi])
-            for rg in rgs:
-                start[fi, rg] = at
-                at += md.row_group(rg).num_rows
+            cols = [*_FETCH_COLUMNS, "pos_blob"] if with_positions else _FETCH_COLUMNS
             with pq.ParquetFile(path, metadata=md) as pf:
-                tables.append(pf.read_row_groups(rgs, columns=columns))
-        schema = tables[0].schema
-        if any(not t.schema.equals(schema) for t in tables[1:]):
-            relaxed = _relaxed(schema)
-            tables = [t.cast(relaxed) for t in tables]
-        return pa.concat_tables(tables).take(
-            [start[fi, rg] + row for fi, rg, row in locs]
-        )
+                tbl = pf.read_row_group(rg, columns=cols)
+            rows, nbytes = _chunk_rows(tbl, self._avgdl, with_positions)
+            if nbytes <= _RESIDENT_BYTES:
+                while self._held + nbytes > _RESIDENT_BYTES:
+                    self._held -= self._rows.pop(next(iter(self._rows)))[1]
+                self._rows[key] = (rows, nbytes)
+                self._held += nbytes
+        return rows
 
 
 def lev_dist_bounded(a: str, b: str, max_edits: int) -> int:
@@ -212,12 +298,6 @@ def _lev_within(a: str, b: str, k: int, transpositions: bool = False) -> bool:
             return False
         prev2, prev = prev, cur
     return prev[-1] <= k
-
-
-# chunk columns the driver fetch materializes (pos_blob only on request)
-_FETCH_COLUMNS = [
-    "term", "bucket", "codec", "df_chunk", "blob", "i_tf", "i_dl", "blocks"
-]
 
 
 @dataclass
@@ -307,7 +387,7 @@ class IndexReader:
         # a time-traveled reader views a HISTORICAL snapshot: tombstones
         # written later must not leak into it
         self._pinned_snapshot = snapshot_id is not None
-        self._locator = _TermLocator(self._partition_files)
+        self._locator = _TermLocator(self._partition_files, self.avgdl)
         # the postings and docmap relations, each built on first use
         self._relations_lock = threading.Lock()
         self._postings: DataFrame | None = None
@@ -745,95 +825,27 @@ class IndexReader:
         self, terms: list[str], with_positions: bool = False
     ) -> dict[str, TermPostings]:
         """Fetch the chunk rows of the query terms WITHOUT a Spark job: a
-        seek through the reader's terms index (``_TermLocator``) reads only
-        the parquet row groups the terms live in and takes their rows. This
-        is the low-latency serving path (p50 is milliseconds). The same
-        path serves the directory and the snapshot layouts; only the file
-        list of a ``term_pref`` partition differs. Use
+        lookup through the reader's terms index (``_TermLocator``) into the
+        chunk rows it holds resident. The first fetch that touches a parquet
+        row group reads and materialises all of its rows once; every later
+        fetch only looks rows up and wraps them in fresh ``TermPostings``.
+        At most ``_RESIDENT_BYTES`` of rows stay resident per reader (blob
+        bytes plus numpy bytes), evicting the row groups loaded first. The
+        rows are a point-in-time view, shared between calls and never
+        mutated.
+        This is the low-latency serving path. The same path serves the
+        directory and the snapshot layouts; only the file list of a
+        ``term_pref`` partition differs. Use
         plans.search.search_distributed when a query's chunk rows are too
         big to hold on one node.
 
         Duplicate terms yield one row set each; terms absent from the index
         are absent from the result. ``with_positions`` adds the
-        ``pos_blob`` column; every other query skips those bytes entirely
-        (columnar pruning).
+        ``pos_blob`` column (rows materialised separately); every other
+        query skips those bytes entirely (columnar pruning).
         """
-        cols = [*_FETCH_COLUMNS, "pos_blob"] if with_positions else _FETCH_COLUMNS
-        tbl = self._locator.read(terms, cols)
-        if tbl is None:
-            return {}
-        # COLUMN-WISE materialization: per-block metadata stays numpy (one
-        # flatten of the arrow list<struct> column) instead of ~blocks-many
-        # Python dicts per query — this was ~half of warm-query latency on
-        # hot terms. Per-chunk dict rows keep only scalars + numpy views.
-        nrows = tbl.num_rows
-        terms_l = tbl.column("term").to_pylist()
-        buckets = tbl.column("bucket").to_pylist()
-        codecs = tbl.column("codec").to_pylist()
-        dfs = tbl.column("df_chunk").to_pylist()
-        blobs = tbl.column("blob").to_pylist()
-        itf_rows = tbl.column("i_tf").to_pylist()
-        idl_rows = tbl.column("i_dl").to_pylist()
-        pos_blobs = (
-            tbl.column("pos_blob").to_pylist() if with_positions else None
-        )
-        bcol = tbl.column("blocks").combine_chunks()
-        row_off = bcol.offsets.to_numpy().astype(np.int64)
-        sv = bcol.values
-        n_np = sv.field("n").to_numpy().astype(np.int64)
-        last_np = sv.field("last_docid").to_numpy().astype(np.int64)
-        og = sv.field("off_g").to_numpy().astype(np.int64)
-        ot = sv.field("off_t").to_numpy().astype(np.int64)
-        od = sv.field("off_d").to_numpy().astype(np.int64)
-        names = {f.name for f in sv.type}
-        op = (
-            sv.field("off_p").to_numpy().astype(np.int64)
-            if "off_p" in names
-            else np.full(n_np.size, -1, dtype=np.int64)
-        )
-        # sv is a StructArray: .field() returns plain (non-chunked) arrays
-        fitf = sv.field("i_tf")
-        fr_off_all = fitf.offsets.to_numpy().astype(np.int64)
-        fr_tf_all = fitf.values.to_numpy().astype(np.int64)
-        fr_dl_all = sv.field("i_dl").values.to_numpy().astype(np.int64)
-        from miru_spark.index.format import best_block_scores
-
         out: dict[str, TermPostings] = {}
-        for i in range(nrows):
-            lo, hi = int(row_off[i]), int(row_off[i + 1])
-            flo, fhi = int(fr_off_all[lo]), int(fr_off_all[hi])
-            bm_meta = {
-                "n": n_np[lo:hi],
-                "last": last_np[lo:hi],
-                "off_g": og[lo:hi],
-                "off_t": ot[lo:hi],
-                "off_d": od[lo:hi],
-                "off_p": op[lo:hi],
-                # frontier views + the avgdl the bounds were baked under, so
-                # block_arrays can re-derive exact bounds under OTHER stats
-                "fr_off": fr_off_all[lo : hi + 1] - flo,
-                "fr_tf": fr_tf_all[flo:fhi],
-                "fr_dl": fr_dl_all[flo:fhi],
-                "avgdl": self.avgdl,
-                "best": best_block_scores(
-                    fr_off_all[lo : hi + 1] - flo,
-                    fr_tf_all[flo:fhi],
-                    fr_dl_all[flo:fhi],
-                    self.avgdl,
-                ),
-            }
-            r = {
-                "term": terms_l[i],
-                "bucket": buckets[i],
-                "codec": codecs[i],
-                "df_chunk": dfs[i],
-                "blob": blobs[i],
-                "i_tf": itf_rows[i],
-                "i_dl": idl_rows[i],
-                "bm": bm_meta,
-            }
-            if with_positions:
-                r["pos_blob"] = pos_blobs[i]
+        for r in self._locator.rows(terms, with_positions):
             tp = out.get(r["term"])
             if tp is None:
                 tp = out[r["term"]] = TermPostings(term=r["term"], df=0.0, idf=0.0)

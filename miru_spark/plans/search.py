@@ -1307,8 +1307,9 @@ def search_synonym(
     Groups then combine conjunctively (every group matched) or
     disjunctively, with the usual NOT / metadata-filter composition.
     Driver path is the vectorized decoder (per-group tf-sum via
-    np.unique + add.at); the terms of one group are decoded from the same
-    pruned fetch the plain path uses."""
+    np.unique + add.at, groups summed per doc by ``_sum_by_doc``); the
+    terms of one group are decoded from the same pruned fetch the plain
+    path uses."""
     if mode not in ("conjunctive", "disjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     if k <= 0 or not groups:
@@ -1346,14 +1347,11 @@ def search_synonym(
         per_group.append((uids, bm25.score_np(tf_sum, idf_g, dl_u, reader.avgdl)))
     if not per_group:
         return []
-    all_ids = np.concatenate([p[0] for p in per_group])
-    all_scores = np.concatenate([p[1] for p in per_group])
-    uids, inv = np.unique(all_ids, return_inverse=True)
-    agg = np.zeros(uids.size)
-    np.add.at(agg, inv, all_scores)
+    uids, agg, cnt = _sum_by_doc(
+        np.concatenate([p[0] for p in per_group]),
+        np.concatenate([p[1] for p in per_group]),
+    )
     if mode == "conjunctive":
-        cnt = np.zeros(uids.size, dtype=np.int64)
-        np.add.at(cnt, inv, 1)
         keep = cnt == len(per_group)
         uids, agg = uids[keep], agg[keep]
     if excl is not None and uids.size:
@@ -1362,8 +1360,7 @@ def search_synonym(
     if incl is not None and uids.size:
         keep = np.isin(uids, incl, assume_unique=True)
         uids, agg = uids[keep], agg[keep]
-    order = np.lexsort((uids, -agg))[:k]
-    return [(int(uids[i]), float(agg[i])) for i in order]
+    return _top_k(uids, agg, k)
 
 
 def search_sorted(
@@ -2682,7 +2679,6 @@ def search_sharded(
     # disjoint so cross-shard aggregation is pure concatenation
     all_ids: list[np.ndarray] = []
     all_scores: list[np.ndarray] = []
-    all_counts: list[np.ndarray] = []
     excl_parts: list[np.ndarray] = []
     for r, tps in zip(readers, per_reader):
         for t in present:
@@ -2691,18 +2687,14 @@ def search_sharded(
             ids, tfs, dls = r.decode_term(tps[t])
             all_ids.append(ids.astype(np.int64))
             all_scores.append(bm25.score_np(tfs, idf[t], dls, avgdl))
-            all_counts.append(np.ones(ids.size, dtype=np.int64))
         ex = _with_tombstones(r, _exclusion_ids(r, exclude))
         if ex is not None and ex.size:
             excl_parts.append(ex)
     if not all_ids:
         return []
-    ids = np.concatenate(all_ids)
-    uids, inv = np.unique(ids, return_inverse=True)
-    agg = np.zeros(uids.size)
-    np.add.at(agg, inv, np.concatenate(all_scores))
-    cnt = np.zeros(uids.size, dtype=np.int64)
-    np.add.at(cnt, inv, np.concatenate(all_counts))
+    uids, agg, cnt = _sum_by_doc(
+        np.concatenate(all_ids), np.concatenate(all_scores)
+    )
     if mode == "conjunctive":
         keep = cnt == len(terms)
         uids, agg = uids[keep], agg[keep]
@@ -2712,8 +2704,7 @@ def search_sharded(
         uids, agg = uids[keep], agg[keep]
     if round_digits is not None:
         agg = np.round(agg, round_digits)
-    order = np.lexsort((uids, -agg))[:k]
-    return [(int(uids[i]), float(agg[i])) for i in order]
+    return _top_k(uids, agg, k)
 
 
 def search_exhaustive(
@@ -2767,19 +2758,16 @@ def _exhaustive_from_tps(
         per_term.append((ids, scores))
     if not per_term:
         return []
-    all_ids = np.concatenate([p[0] for p in per_term])
-    all_scores = np.concatenate([p[1] for p in per_term])
-    uids, inv = np.unique(all_ids, return_inverse=True)
-    agg = np.zeros(uids.size)
-    np.add.at(agg, inv, all_scores)
+    uids, agg, cnt = _sum_by_doc(
+        np.concatenate([p[0] for p in per_term]),
+        np.concatenate([p[1] for p in per_term]),
+    )
     # conjunctive = every term; disjunctive with minimum_should_match = at
     # least min_match distinct terms (scores still sum over all matches)
     required = len(per_term) if mode == "conjunctive" else min_match
     if required > len(per_term):
         return []  # fewer indexed terms than the match floor: nothing can hit
     if required > 1:
-        cnt = np.zeros(uids.size, dtype=np.int64)
-        np.add.at(cnt, inv, 1)
         keep = cnt >= required
         uids, agg = uids[keep], agg[keep]
     if bonus is not None and uids.size:
@@ -2798,6 +2786,55 @@ def _exhaustive_from_tps(
     if after is not None and uids.size:
         s, d = after
         keep = (agg < s - _EPS) | ((agg <= s + _EPS) & (uids > d))
+        uids, agg = uids[keep], agg[keep]
+    return _top_k(uids, agg, k)
+
+
+def _sum_by_doc(ids: np.ndarray, scores: np.ndarray):
+    """Per-doc accumulation of int64 doc ids and float64 scores ->
+    (ascending unique ids, summed scores, match counts).
+
+    Dense (``_sum_dense``) when the ids' span is small for their count,
+    sparse (``_sum_sparse``) otherwise. Both add each doc's scores in input
+    order starting from 0.0, so the sums are bit-identical. The gate,
+    measured with numpy on a 4-core VM: the sparse sort costs ~40-60 ns
+    per id; the dense pass ~3 ns per slot while its span-sized buffers come
+    from reused heap, but ~25 ns per slot once they need fresh pages (past
+    ~128-256 KB a buffer). So ``8192`` slots (64 KB a buffer) beat the
+    smallest sort outright, and ``2`` slots per id stay below the
+    fresh-page crossover, measured at 2-2.5 slots per id."""
+    if ids.size and int(ids.max()) - int(ids.min()) < 2 * ids.size + 8192:
+        return _sum_dense(ids, scores)
+    return _sum_sparse(ids, scores)
+
+
+def _sum_dense(ids: np.ndarray, scores: np.ndarray):
+    """``_sum_by_doc`` over one slot per id of the span: a weighted and a
+    plain ``bincount``. ``ids`` must be non-empty."""
+    lo = int(ids.min())
+    rel = ids - lo
+    span = int(rel.max()) + 1
+    cnt = np.bincount(rel, minlength=span)
+    hit = np.flatnonzero(cnt > 0)
+    return hit + lo, np.bincount(rel, scores, minlength=span)[hit], cnt[hit]
+
+
+def _sum_sparse(ids: np.ndarray, scores: np.ndarray):
+    """``_sum_by_doc`` by sorting: ``np.unique`` + ``np.add.at``."""
+    uids, inv, cnt = np.unique(ids, return_inverse=True, return_counts=True)
+    agg = np.zeros(uids.size)
+    np.add.at(agg, inv, scores)
+    return uids, agg, cnt
+
+
+def _top_k(uids: np.ndarray, agg: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """The k best (doc id, score) pairs in the full ``lexsort`` order: score
+    descending, doc id ascending on ties. Only the scores at or above the
+    k-th best are sorted; every tie at the k-th score is kept, so the cut
+    cannot change which doc ids win."""
+    if 0 < k < uids.size:
+        kth = np.partition(agg, uids.size - k)[uids.size - k]
+        keep = ~(agg < kth)  # NaN-safe: a NaN k-th keeps everything
         uids, agg = uids[keep], agg[keep]
     order = np.lexsort((uids, -agg))[:k]
     return [(int(uids[i]), float(agg[i])) for i in order]

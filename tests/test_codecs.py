@@ -12,6 +12,7 @@ from miru_spark.functions.codecs import (
     pfor_encode,
     varint_decode,
     varint_encode,
+    varint_encode_with_lengths,
 )
 
 arrays = st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=400).map(
@@ -35,6 +36,45 @@ def test_pfor_roundtrip(arr):
     out, used = pfor_decode(buf)
     assert used == len(buf)
     np.testing.assert_array_equal(out, arr)
+
+
+@given(
+    st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=200),
+    st.data(),
+)
+@settings(max_examples=150, deadline=None)
+def test_varint_roundtrip_full_range_and_mid_stream(xs, data):
+    """Values up to 2**64 - 1 (10 varint bytes) round-trip, and a decode
+    starting mid-stream with ``offset``/``count`` equals slicing."""
+    arr = np.array(xs, dtype=np.uint64)
+    buf, lens = varint_encode_with_lengths(arr)
+    out, used = varint_decode(buf)
+    assert used == len(buf)
+    assert np.array_equal(out, arr)
+    i = data.draw(st.integers(0, arr.size))
+    j = data.draw(st.integers(i, arr.size))
+    offs = np.concatenate(([0], np.cumsum(lens))).astype(np.int64)
+    part, used = varint_decode(buf + b"\xff\x01", int(offs[i]), count=j - i)
+    assert np.array_equal(part, arr[i:j])
+    assert used == int(offs[j] - offs[i])
+
+
+def test_varint_ten_byte_values():
+    top = np.array([2**63 - 1, 2**63, 2**64 - 1, 0, 2**64 - 2], dtype=np.uint64)
+    buf = varint_encode(top)
+    assert varint_encode(top[2:3]) == b"\xff" * 9 + b"\x01"
+    out, used = varint_decode(buf)
+    assert used == len(buf) and np.array_equal(out, top)
+
+
+def test_varint_truncated_stream_raises():
+    buf = varint_encode(np.array([5, 300, 2**64 - 1], dtype=np.uint64))
+    with pytest.raises(ValueError):
+        varint_decode(buf[:-1], 0, count=3)
+    with pytest.raises(ValueError):
+        varint_decode(buf, 0, count=4)
+    with pytest.raises(ValueError):
+        varint_decode(buf, 1, count=3)  # starts inside the second value
 
 
 def test_varint_known_values():

@@ -244,6 +244,28 @@ def test_non_phrase_fetch_skips_pos_blob(pos_index):
     assert tps2["join"].chunks[0]["pos_blob"] is not None
 
 
+def test_phrase_after_plain_fetch_on_one_reader(spark, pos_index):
+    """One reader keeps a file's rows with and without positions apart: a
+    plain fetch first, then a phrase query over the same terms, returns
+    ``pos_blob`` rows and the hits of a fresh reader, and the plain rows
+    still carry no ``pos_blob``."""
+    from miru_spark.plans.search import search_phrase
+
+    terms = ["join", "hash"]
+    r = IndexReader(spark, pos_index.index_path)
+    plain = r.fetch_terms(terms)
+    assert set(plain) == set(terms)
+    assert all("pos_blob" not in c for tp in plain.values() for c in tp.chunks)
+    got = search_phrase(r, "join hash", k=10)
+    fresh = IndexReader(spark, pos_index.index_path)
+    assert got and got == search_phrase(fresh, "join hash", k=10)
+    pos = r.fetch_terms(terms, with_positions=True)
+    assert all(c["pos_blob"] is not None for tp in pos.values() for c in tp.chunks)
+    assert fetched_rows(r, terms, True) == fetched_rows(fresh, terms, True)
+    again = r.fetch_terms(terms)
+    assert all("pos_blob" not in c for tp in again.values() for c in tp.chunks)
+
+
 def test_positional_fetch_matches_scan(pos_index):
     """``with_positions=True`` seeks the same rows, pos_blob included, that
     a full scan of the postings reads."""

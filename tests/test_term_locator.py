@@ -1,6 +1,7 @@
-"""The driver fetch seeks chunk rows through the reader's term locator:
-the rows equal a full scan of the same postings, one reader serves many
-threads, and no file handle outlives a call."""
+"""The driver fetch looks chunk rows up through the reader's term locator
+in the rows it holds resident: the rows equal a full scan of the same
+postings, one reader serves many threads, the resident bytes stay under
+their bound, and no file handle outlives a call."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import threading
 
 import pyarrow.parquet as pq
 
+from miru_spark.index import reader as reader_mod
 from miru_spark.index import snapshots as snapmod
 from miru_spark.index.reader import IndexReader
 from miru_spark.plans.search import search_distributed, search_facets, search_topk
@@ -40,10 +42,11 @@ def test_fetch_keeps_isin_semantics(reader, index_path):
     assert fetched_rows(reader, vocab) == scanned_rows(reader, vocab)
 
 
-def test_shared_reader_threads_match_sequential(spark, index_path):
+def test_shared_reader_threads_match_sequential(spark, index_path, monkeypatch):
     """16 threads share one fresh reader (so they race on the lazy locator
-    build) and each serves a slice of mixed conjunctive/disjunctive
-    queries; every result equals a sequential run, with no errors."""
+    build and on materialising each row group's rows) and each serves
+    a slice of mixed conjunctive/disjunctive queries; every result equals
+    a sequential run, with no errors."""
     vocab = _vocab(index_path)
     rng = random.Random(7)
     queries = [
@@ -54,6 +57,14 @@ def test_shared_reader_threads_match_sequential(spark, index_path):
     seq_reader = IndexReader(spark, index_path)
     want = [search_topk(seq_reader, t, mode=m, k=10) for t, m in queries]
 
+    loads = []
+    chunk_rows = reader_mod._chunk_rows
+
+    def counted(*args):
+        loads.append(args)
+        return chunk_rows(*args)
+
+    monkeypatch.setattr(reader_mod, "_chunk_rows", counted)
     shared = IndexReader(spark, index_path)
     n_threads, per_thread = 16, 60
     start = threading.Barrier(n_threads)
@@ -88,6 +99,39 @@ def test_shared_reader_threads_match_sequential(spark, index_path):
     # each partition was built once: no file footer cached twice
     paths = [p for p, _ in shared._locator._files]
     assert len(paths) == len(set(paths))
+    # and no row group was materialised twice: every load is still resident
+    assert loads and len(loads) == len(shared._locator._rows)
+
+
+def test_resident_rows_bounded_and_evicted(spark, index_path, monkeypatch):
+    """A byte bound far below the index forces eviction in load order:
+    results equal a fresh default reader's, and the resident bytes never
+    exceed the bound."""
+    vocab = _vocab(index_path)
+    rng = random.Random(5)
+    queries = [
+        (rng.sample(vocab, rng.randint(1, 3)), ("conjunctive", "disjunctive")[i % 2])
+        for i in range(60)
+    ]
+    ref = IndexReader(spark, index_path)
+    want = [search_topk(ref, t, mode=m, k=10) for t, m in queries]
+    want_rows = fetched_rows(ref, vocab)
+    sizes = sorted(n for _, n in ref._locator._rows.values())
+    assert len(sizes) > 4
+    bound = sizes[-1] + sizes[-2]  # room for about two row groups at a time
+    monkeypatch.setattr(reader_mod, "_RESIDENT_BYTES", bound)
+    small = IndexReader(spark, index_path)
+    loc = small._locator
+    for (t, m), w in zip(queries, want):
+        assert search_topk(small, t, mode=m, k=10) == w
+        assert loc._held == sum(n for _, n in loc._rows.values()) <= bound
+    assert fetched_rows(small, vocab) == want_rows
+    assert loc._held <= bound and len(loc._rows) < len(ref._locator._rows)
+    # a bound smaller than any row group keeps nothing and still serves
+    monkeypatch.setattr(reader_mod, "_RESIDENT_BYTES", 1)
+    tiny = IndexReader(spark, index_path)
+    assert fetched_rows(tiny, vocab) == want_rows
+    assert tiny._locator._rows == {} and tiny._locator._held == 0
 
 
 def test_shared_reader_distributed_threads_match_sequential(spark, index_path):
