@@ -8,13 +8,14 @@ in-memory terms index is the model): ``term -> [(file, row group, row)]``,
 built lazily for one ``term_pref`` partition the first time a query
 touches it, from that partition's ``term`` and ``bucket`` columns, and
 cached with each file's parquet footer. Beside it the reader holds the
-chunk rows themselves: the first fetch that touches a row group reads it
-once and materialises its rows as the dicts ``fetch_terms`` returns, so
-every later fetch is a dict lookup — no parquet read, ``take`` or
-per-query materialisation. At most ``_RESIDENT_BYTES`` (128 MiB of blob
-bytes plus numpy bytes) stay resident per reader; past it the row groups
-loaded first are evicted first. The same terms-index pass sums each
-term's ``df_chunk``, so the distributed scorers read a term's global df
+chunk rows themselves: the first fetch that needs a row reads its row
+group, takes the rows it misses (all rows of a small row group) and
+materialises them as the dicts ``fetch_terms`` returns, so every later fetch of those rows is a dict
+lookup — no parquet read, ``take`` or per-query materialisation. At most
+``_RESIDENT_BYTES`` (128 MiB, counted as the Python and numpy bytes the
+rows keep alive) stay resident per reader; past it the rows loaded first
+are evicted first. The same terms-index pass sums each term's
+``df_chunk``, so the distributed scorers read a term's global df
 driver-side too. Everything else is tiny (stats.json, df rows for <=10
 query terms).
 
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 from dataclasses import dataclass, field
 
@@ -41,10 +43,17 @@ from miru_spark.index.format import impact_bound
 from miru_spark.index.writer import term_pref_py
 
 
-# Bytes of materialised chunk rows one reader keeps resident: blob (and
-# pos_blob) bytes plus numpy ``nbytes``, counted when a row group is
-# loaded. Past it, the row groups loaded first are evicted first.
+# Bytes of materialised chunk rows one reader keeps resident, counted by
+# ``_chunk_rows`` when the rows are loaded. Past it, the rows loaded first
+# are evicted first.
 _RESIDENT_BYTES = 128 << 20
+
+# A miss in a row group of at most this many rows materialises all of
+# them: a row costs ~25 us to materialise and the row group's read ~1 ms,
+# so the whole group costs at most about a second read, and later misses
+# in it are saved. A bigger group materialises only the missed rows, so a
+# miss never costs much more than the seek did before rows were kept.
+_WHOLE_GROUP_ROWS = 64
 
 # chunk columns the driver fetch materializes (pos_blob only on request)
 _FETCH_COLUMNS = [
@@ -52,14 +61,27 @@ _FETCH_COLUMNS = [
 ]
 
 
-def _chunk_rows(tbl, avgdl: float, with_positions: bool) -> tuple[list, int]:
+# a chunk row's numpy block metadata that views table-wide arrays
+_VIEWS = ("n", "last", "off_g", "off_t", "off_d", "off_p", "fr_tf", "fr_dl", "best")
+
+
+def _chunk_rows(tbl, avgdl: float, with_positions: bool) -> tuple[list, list]:
     """A table's chunk rows as the dicts ``fetch_terms`` hands out, in table
-    order, and their resident bytes (blob bytes plus numpy ``nbytes``).
+    order, and the bytes each keeps alive.
 
     Column-wise materialization: per-block metadata stays numpy (one
     flatten of the arrow list<struct> column) instead of ~blocks-many
     Python dicts; a row keeps only scalars, its blob bytes and numpy views,
-    plus the per-block ``best`` bounds baked under ``avgdl``."""
+    plus the per-block ``best`` bounds baked under ``avgdl``. Those are
+    computed for the whole table in one pass: the score is per (tf, dl)
+    pair and the max per block, so each row's slice equals its own pass
+    exactly.
+
+    A row's bytes are ``_row_bytes`` plus the data of its views into the
+    table-wide numpy arrays; the first row also carries those arrays'
+    headers, so a table's rows sum to all they hold together. Rows are
+    evicted in load order, so the rows of one table leave together and
+    never leave their shared arrays counted by no one for long."""
     from miru_spark.index.format import best_block_scores
 
     terms_l = tbl.column("term").to_pylist()
@@ -87,13 +109,17 @@ def _chunk_rows(tbl, avgdl: float, with_positions: bool) -> tuple[list, int]:
     # sv is a StructArray: .field() returns plain (non-chunked) arrays
     fitf = sv.field("i_tf")
     fr_off_all = fitf.offsets.to_numpy().astype(np.int64)
+    fr_end = int(fr_off_all[-1]) if fr_off_all.size else 0
     fr_tf_all = fitf.values.to_numpy().astype(np.int64)
     fr_dl_all = sv.field("i_dl").values.to_numpy().astype(np.int64)
-    rows, nbytes = [], 0
+    best_all = best_block_scores(
+        fr_off_all, fr_tf_all[:fr_end], fr_dl_all[:fr_end], avgdl
+    )
+    bases = (n_np, last_np, og, ot, od, op, fr_tf_all, fr_dl_all, best_all)
+    rows, sizes = [], []
     for i in range(tbl.num_rows):
         lo, hi = int(row_off[i]), int(row_off[i + 1])
         flo, fhi = int(fr_off_all[lo]), int(fr_off_all[hi])
-        fr_off = fr_off_all[lo : hi + 1] - flo
         bm_meta = {
             "n": n_np[lo:hi],
             "last": last_np[lo:hi],
@@ -103,13 +129,11 @@ def _chunk_rows(tbl, avgdl: float, with_positions: bool) -> tuple[list, int]:
             "off_p": op[lo:hi],
             # frontier views + the avgdl the bounds were baked under, so
             # block_arrays can re-derive exact bounds under OTHER stats
-            "fr_off": fr_off,
+            "fr_off": fr_off_all[lo : hi + 1] - flo,
             "fr_tf": fr_tf_all[flo:fhi],
             "fr_dl": fr_dl_all[flo:fhi],
             "avgdl": avgdl,
-            "best": best_block_scores(
-                fr_off, fr_tf_all[flo:fhi], fr_dl_all[flo:fhi], avgdl
-            ),
+            "best": best_all[lo:hi],
         }
         r = {
             "term": terms_l[i],
@@ -121,14 +145,32 @@ def _chunk_rows(tbl, avgdl: float, with_positions: bool) -> tuple[list, int]:
             "i_dl": idl_rows[i],
             "bm": bm_meta,
         }
-        nbytes += len(blobs[i]) + sum(
-            v.nbytes for v in bm_meta.values() if isinstance(v, np.ndarray)
-        )
         if with_positions:
             r["pos_blob"] = pos_blobs[i]
-            nbytes += len(pos_blobs[i] or b"")
         rows.append(r)
-    return rows, nbytes
+        sizes.append(_row_bytes(r) + sum(bm_meta[k].nbytes for k in _VIEWS))
+    if sizes:
+        # the bases' own headers and any data no view spans
+        sizes[0] += sum(map(sys.getsizeof, bases)) - sum(
+            sum(r["bm"][k].nbytes for r in rows) for k in _VIEWS
+        )
+    return rows, sizes
+
+
+def _row_bytes(r: dict) -> int:
+    """Bytes one chunk row keeps alive besides the numpy buffers its views
+    share: ``sys.getsizeof`` of the row and its block dict, of every value
+    of both (object headers, str and bytes payloads, the owned ``fr_off``
+    buffer) and of the ints in its frontier lists. Dict keys are shared
+    literals and are not counted."""
+    get = sys.getsizeof
+    return (
+        get(r)
+        + sum(map(get, r.values()))
+        + sum(map(get, r["bm"].values()))
+        + sum(map(get, r["i_tf"]))
+        + sum(map(get, r["i_dl"]))
+    )
 
 
 class _TermLocator:
@@ -143,25 +185,29 @@ class _TermLocator:
     of its partition reads. Memory is O(terms in the partitions touched so
     far), the same class as Lucene's in-memory terms index.
 
-    Chunk rows are materialised per (file, row group, ``with_positions``):
-    the first fetch that touches a row group reads it whole, closes the
-    file at once, builds the rows ``fetch_terms`` hands out (scalars, blob
-    bytes, numpy block views, ``best`` bounds under the reader's avgdl)
-    and keeps them. Later fetches look them up. A row group is the unit
-    because it is the smallest parquet read: first touch reads no more
-    than a seek would, and a large file is never read whole for one term.
-    Rows are shared by every fetch and never mutated; nothing but the
-    loader writes a row key. At most ``_RESIDENT_BYTES`` stay resident per
-    reader, evicting the row groups loaded first; one bigger than that on
-    its own is served without being kept. Because each row group is
-    materialised on its own, files of different layout generations
-    (required- and optional-field schemas) never meet in one table.
+    Chunk rows are kept per (file, row group, row, ``with_positions``). A
+    fetch that misses rows reads each of their row groups once (the
+    smallest parquet read), closes the file at once, takes the missed rows
+    (all rows of a group of at most ``_WHOLE_GROUP_ROWS``), builds the
+    dicts ``fetch_terms`` hands out (scalars, blob bytes, numpy block
+    views, ``best`` bounds under the reader's avgdl) and keeps them; a
+    miss costs about what the seek did before rows were kept. Rows are shared by every
+    fetch and never mutated; nothing but the loader writes a row key. At
+    most ``_RESIDENT_BYTES`` stay resident per reader (the bytes
+    ``_chunk_rows`` counts: payloads, numpy buffers and every Python
+    object of a row), evicting the rows loaded first; a row bigger than
+    that on its own is served without being kept. Because each row group
+    is read on its own, files of different layout generations (required-
+    and optional-field schemas) never meet in one table.
 
-    Partitions and row groups are built under one lock and published only
-    once complete, so a reader shared by threads builds each at most once
-    while it stays resident; a hit is a lock-free dict ``get``. No file handle
-    outlives a call, and the rows are a point-in-time view like the rest
-    of the reader.
+    Partitions are built under the locator's lock and published only once
+    complete. Rows are read and materialised outside it: the first thread
+    to miss a row registers its load and the others wait for it and share
+    the row, so a reader shared by threads builds each partition and row
+    at most once while it stays resident, and one load never stalls
+    another. A hit is a lock-free dict ``get``. No file handle outlives a
+    call, and the rows are a point-in-time view like the rest of the
+    reader.
     """
 
     def __init__(self, partition_files, avgdl: float):
@@ -171,10 +217,11 @@ class _TermLocator:
         self._parts: dict[int, dict[str, list[tuple[int, int, int]]]] = {}
         self._files: list[tuple] = []  # file index -> (path, FileMetaData)
         self._df: dict[str, int] = {}  # term -> sum of its df_chunk
-        # (file index, row group, with_positions) -> (rows, bytes), in
+        # (file index, row group, row, with_positions) -> (row, bytes), in
         # load order
-        self._rows: dict[tuple[int, int, bool], tuple[list, int]] = {}
+        self._rows: dict[tuple[int, int, int, bool], tuple[dict, int]] = {}
         self._held = 0  # resident bytes: sum over self._rows
+        self._loading: dict[tuple[int, int, int, bool], _Load] = {}
 
     def _partition(self, pref: int) -> dict[str, list[tuple[int, int, int]]]:
         part = self._parts.get(pref)
@@ -221,42 +268,93 @@ class _TermLocator:
         }
 
     def rows(self, terms, with_positions: bool) -> list[dict]:
-        """The resident chunk rows of ``terms``, ordered by (term, bucket).
+        """The chunk rows of ``terms``, ordered by (term, bucket): resident
+        ones looked up, missing ones materialised by ``_load`` (with every
+        other row of a row group of at most ``_WHOLE_GROUP_ROWS``).
         Duplicate terms are looked up once; absent terms contribute
         nothing."""
-        groups: dict[tuple[int, int], list] = {}
-        out = []
-        for t in sorted(set(terms)):
-            for fi, rg, row in self._partition(term_pref_py(t)).get(t, ()):
-                rows = groups.get((fi, rg))
-                if rows is None:
-                    rows = self._group_rows(fi, rg, with_positions)
-                    groups[fi, rg] = rows
-                out.append(rows[row])
+        keys = [
+            (fi, rg, row, with_positions)
+            for t in sorted(set(terms))
+            for fi, rg, row in self._partition(term_pref_py(t)).get(t, ())
+        ]
+        got, missed = {}, {}
+        for key in keys:
+            hit = self._rows.get(key)
+            if hit is None:
+                missed.setdefault(key[:2], []).append(key)
+            else:
+                got[key] = hit[0]
+        for (fi, rg), group in missed.items():
+            n = self._files[fi][1].row_group(rg).num_rows
+            if n <= _WHOLE_GROUP_ROWS:
+                group = [(fi, rg, row, with_positions) for row in range(n)]
+            got.update(self._load(group))
+        return [got[key] for key in keys]
+
+    def _load(self, keys: list) -> dict:
+        """The chunk rows ``keys`` (all in one row group). A row another
+        thread is loading is waited for and shared; the rest are
+        registered, then read and materialised outside the lock in one
+        read of the row group, and published."""
+        out, mine, theirs = {}, {}, {}
+        with self._lock:
+            for key in keys:
+                hit = self._rows.get(key)
+                if hit is not None:
+                    out[key] = hit[0]
+                elif key in self._loading:
+                    theirs[key] = self._loading[key]
+                else:
+                    mine[key] = self._loading[key] = _Load()
+        if mine:
+            self._materialise(mine)
+            out.update((key, load.row) for key, load in mine.items())
+        for key, load in theirs.items():
+            load.done.wait()
+            # None: that load failed, so try again
+            out[key] = load.row if load.row is not None else self._load([key])[key]
         return out
 
-    def _group_rows(self, fi: int, rg: int, with_positions: bool) -> list:
-        key = (fi, rg, with_positions)
-        hit = self._rows.get(key)
-        if hit is not None:
-            return hit[0]
+    def _materialise(self, loads: dict) -> None:
+        """Read the row group of ``loads`` (keys this thread registered),
+        take and materialise their rows into the loads, keep what fits the
+        bound, and release the waiters, also when the read fails."""
         import pyarrow.parquet as pq
 
-        with self._lock:
-            hit = self._rows.get(key)
-            if hit is not None:
-                return hit[0]
+        fi, rg, _, with_positions = next(iter(loads))
+        sizes = []
+        try:
             path, md = self._files[fi]
             cols = [*_FETCH_COLUMNS, "pos_blob"] if with_positions else _FETCH_COLUMNS
             with pq.ParquetFile(path, metadata=md) as pf:
                 tbl = pf.read_row_group(rg, columns=cols)
-            rows, nbytes = _chunk_rows(tbl, self._avgdl, with_positions)
-            if nbytes <= _RESIDENT_BYTES:
-                while self._held + nbytes > _RESIDENT_BYTES:
-                    self._held -= self._rows.pop(next(iter(self._rows)))[1]
-                self._rows[key] = (rows, nbytes)
-                self._held += nbytes
-        return rows
+            rows, sizes = _chunk_rows(
+                tbl.take([key[2] for key in loads]), self._avgdl, with_positions
+            )
+            for load, row in zip(loads.values(), rows):
+                load.row = row
+        finally:
+            with self._lock:
+                for key in loads:
+                    del self._loading[key]
+                for (key, load), n in zip(loads.items(), sizes):
+                    if n <= _RESIDENT_BYTES:
+                        while self._held + n > _RESIDENT_BYTES:
+                            self._held -= self._rows.pop(next(iter(self._rows)))[1]
+                        self._rows[key] = (load.row, n)
+                        self._held += n
+            for load in loads.values():
+                load.done.set()
+
+
+class _Load:
+    """One chunk row being materialised: threads that miss on it meanwhile
+    wait on ``done`` and share ``row`` (None if the load failed)."""
+
+    def __init__(self):
+        self.done = threading.Event()
+        self.row: dict | None = None
 
 
 def lev_dist_bounded(a: str, b: str, max_edits: int) -> int:
@@ -826,13 +924,13 @@ class IndexReader:
     ) -> dict[str, TermPostings]:
         """Fetch the chunk rows of the query terms WITHOUT a Spark job: a
         lookup through the reader's terms index (``_TermLocator``) into the
-        chunk rows it holds resident. The first fetch that touches a parquet
-        row group reads and materialises all of its rows once; every later
-        fetch only looks rows up and wraps them in fresh ``TermPostings``.
-        At most ``_RESIDENT_BYTES`` of rows stay resident per reader (blob
-        bytes plus numpy bytes), evicting the row groups loaded first. The
-        rows are a point-in-time view, shared between calls and never
-        mutated.
+        chunk rows it holds resident. The first fetch that needs a row reads
+        its parquet row group, takes and materialises the missed rows once;
+        every later fetch only looks rows up and wraps them in fresh
+        ``TermPostings``. At most ``_RESIDENT_BYTES`` of rows stay resident
+        per reader (the Python and numpy bytes they keep alive), evicting
+        the rows loaded first. The rows are a point-in-time view, shared between
+        calls and never mutated.
         This is the low-latency serving path. The same path serves the
         directory and the snapshot layouts; only the file list of a
         ``term_pref`` partition differs. Use

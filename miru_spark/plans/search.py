@@ -2830,11 +2830,13 @@ def _sum_sparse(ids: np.ndarray, scores: np.ndarray):
 def _top_k(uids: np.ndarray, agg: np.ndarray, k: int) -> list[tuple[int, float]]:
     """The k best (doc id, score) pairs in the full ``lexsort`` order: score
     descending, doc id ascending on ties. Only the scores at or above the
-    k-th best are sorted; every tie at the k-th score is kept, so the cut
-    cannot change which doc ids win."""
+    k-th best are sorted; every tie at the k-th score is kept, so for
+    finite scores (BM25 sums are) the cut cannot change which doc ids win.
+    A NaN is not supported: ``np.partition`` ranks it above every score,
+    while the full sort ranks it last."""
     if 0 < k < uids.size:
         kth = np.partition(agg, uids.size - k)[uids.size - k]
-        keep = ~(agg < kth)  # NaN-safe: a NaN k-th keeps everything
+        keep = agg >= kth
         uids, agg = uids[keep], agg[keep]
     order = np.lexsort((uids, -agg))[:k]
     return [(int(uids[i]), float(agg[i])) for i in order]

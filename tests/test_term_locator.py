@@ -1,7 +1,8 @@
 """The driver fetch looks chunk rows up through the reader's term locator
 in the rows it holds resident: the rows equal a full scan of the same
 postings, one reader serves many threads, the resident bytes stay under
-their bound, and no file handle outlives a call."""
+their bound and cover what the rows hold, and no file handle outlives a
+call."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import random
 import sys
 import threading
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from miru_spark.index import reader as reader_mod
@@ -44,7 +46,7 @@ def test_fetch_keeps_isin_semantics(reader, index_path):
 
 def test_shared_reader_threads_match_sequential(spark, index_path, monkeypatch):
     """16 threads share one fresh reader (so they race on the lazy locator
-    build and on materialising each row group's rows) and each serves
+    build and on materialising each chunk row) and each serves
     a slice of mixed conjunctive/disjunctive queries; every result equals
     a sequential run, with no errors."""
     vocab = _vocab(index_path)
@@ -61,8 +63,9 @@ def test_shared_reader_threads_match_sequential(spark, index_path, monkeypatch):
     chunk_rows = reader_mod._chunk_rows
 
     def counted(*args):
-        loads.append(args)
-        return chunk_rows(*args)
+        rows, sizes = chunk_rows(*args)
+        loads.extend(rows)
+        return rows, sizes
 
     monkeypatch.setattr(reader_mod, "_chunk_rows", counted)
     shared = IndexReader(spark, index_path)
@@ -99,7 +102,7 @@ def test_shared_reader_threads_match_sequential(spark, index_path, monkeypatch):
     # each partition was built once: no file footer cached twice
     paths = [p for p, _ in shared._locator._files]
     assert len(paths) == len(set(paths))
-    # and no row group was materialised twice: every load is still resident
+    # and no chunk row was materialised twice: every one is still resident
     assert loads and len(loads) == len(shared._locator._rows)
 
 
@@ -118,7 +121,7 @@ def test_resident_rows_bounded_and_evicted(spark, index_path, monkeypatch):
     want_rows = fetched_rows(ref, vocab)
     sizes = sorted(n for _, n in ref._locator._rows.values())
     assert len(sizes) > 4
-    bound = sizes[-1] + sizes[-2]  # room for about two row groups at a time
+    bound = sizes[-1] + sizes[-2]  # room for about two rows at a time
     monkeypatch.setattr(reader_mod, "_RESIDENT_BYTES", bound)
     small = IndexReader(spark, index_path)
     loc = small._locator
@@ -127,11 +130,119 @@ def test_resident_rows_bounded_and_evicted(spark, index_path, monkeypatch):
         assert loc._held == sum(n for _, n in loc._rows.values()) <= bound
     assert fetched_rows(small, vocab) == want_rows
     assert loc._held <= bound and len(loc._rows) < len(ref._locator._rows)
-    # a bound smaller than any row group keeps nothing and still serves
+    # a bound smaller than any row keeps nothing and still serves
     monkeypatch.setattr(reader_mod, "_RESIDENT_BYTES", 1)
     tiny = IndexReader(spark, index_path)
     assert fetched_rows(tiny, vocab) == want_rows
     assert tiny._locator._rows == {} and tiny._locator._held == 0
+
+
+def test_counted_bytes_cover_rare_term_rows(spark, tmp_path, monkeypatch):
+    """The bytes the store counts for chunk rows of rare terms (tiny blobs,
+    so the Python objects dominate) cover what ``tracemalloc`` sees the
+    rows hold, without overstating it by much; the locator serves that
+    index exactly as a full scan does, also when a miss materialises only
+    the missed rows of a row group."""
+    import tracemalloc
+
+    from miru_spark.index.writer import build_index
+    from miru_spark.schema import corpus_from_documents
+
+    docs = spark.createDataFrame(
+        [(d, " ".join(f"r{d * 3 + j:05d}" for j in range(3)), "en", "s", 20)
+         for d in range(300)],
+        "doc_id long, text string, lang string, source string, n_chars int",
+    )
+    idx = str(tmp_path / "rare")
+    build_index(spark, corpus_from_documents(docs), idx, num_partitions=2)
+    reader = IndexReader(spark, idx)
+    vocab = _vocab(idx)
+    assert len(vocab) == 900
+    want = scanned_rows(reader, vocab)
+    assert fetched_rows(reader, vocab) == want
+    assert len(reader._locator._rows) == len(vocab)  # one chunk row a term
+    # row groups above the whole-group size: only missed rows are kept
+    monkeypatch.setattr(reader_mod, "_WHOLE_GROUP_ROWS", 0)
+    per_row = IndexReader(spark, idx)
+    some = vocab[::50]
+    assert fetched_rows(per_row, some) == scanned_rows(reader, some)
+    assert len(per_row._locator._rows) == len(some)
+    assert fetched_rows(per_row, vocab) == want
+
+    groups = [
+        (os.path.join(d, f), rg)
+        for d, _, fs in os.walk(f"{idx}/postings")
+        for f in fs
+        if f.endswith(".parquet")
+        for rg in range(pq.ParquetFile(os.path.join(d, f)).num_row_groups)
+    ]
+    # all 900 rare-term rows in one call, so per-call noise is negligible
+    tbl = pa.concat_tables(
+        pq.ParquetFile(f).read_row_group(rg, columns=reader_mod._FETCH_COLUMNS)
+        for f, rg in groups
+    )
+    gc.collect()
+    tracemalloc.start()
+    try:
+        rows, sizes = reader_mod._chunk_rows(tbl, reader.avgdl, False)
+        gc.collect()
+        traced = tracemalloc.get_traced_memory()[0]
+    finally:
+        tracemalloc.stop()
+    assert len(rows) == tbl.num_rows == len(vocab)
+    counted = sum(sizes)
+    # the count covers what the rows hold without overstating it by much
+    assert traced <= counted <= 1.25 * traced
+
+
+def test_row_load_does_not_block_other_fetches(spark, index_path, monkeypatch):
+    """While one thread materialises a term's chunk rows, a fetch of
+    another partition's term completes, and a second fetch of the stalled
+    term waits for that load and shares its rows instead of loading
+    again."""
+    vocab = _vocab(index_path)
+    slow = vocab[0]
+    other = next(t for t in vocab
+                 if reader_mod.term_pref_py(t) != reader_mod.term_pref_py(slow))
+    entered, release = threading.Event(), threading.Event()
+    loads = []
+    chunk_rows = reader_mod._chunk_rows
+
+    def stalled(tbl, *args):
+        loads.append(tbl.column("term").to_pylist())
+        if slow in loads[-1]:
+            entered.set()
+            assert release.wait(60)
+        return chunk_rows(tbl, *args)
+
+    monkeypatch.setattr(reader_mod, "_chunk_rows", stalled)
+    reader = IndexReader(spark, index_path)
+    got: dict[str, dict] = {}
+
+    def fetch(name: str, term: str) -> None:
+        got[name] = reader.fetch_terms([term])
+
+    first = threading.Thread(target=fetch, args=("first", slow))
+    first.start()
+    assert entered.wait(60)
+    second = threading.Thread(target=fetch, args=("second", slow))
+    second.start()
+    third = threading.Thread(target=fetch, args=("other", other))
+    third.start()
+    third.join(timeout=60)
+    try:
+        assert not third.is_alive() and "other" in got
+        assert "first" not in got and "second" not in got
+    finally:
+        release.set()
+        first.join(timeout=60)
+        second.join(timeout=60)
+    a, b = got["first"][slow].chunks, got["second"][slow].chunks
+    assert a and len(a) == len(b) and all(x is y for x, y in zip(a, b))
+    # no chunk row was materialised twice: every one is still resident
+    assert sum(map(len, loads)) == len(reader._locator._rows)
+    fresh = IndexReader(spark, index_path)
+    assert fetched_rows(reader, [slow, other]) == fetched_rows(fresh, [slow, other])
 
 
 def test_shared_reader_distributed_threads_match_sequential(spark, index_path):
