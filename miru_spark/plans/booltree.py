@@ -43,16 +43,30 @@ route when the first pass must stay WAND.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator, Union
+from typing import Union
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from miru_spark.functions import bm25
 from miru_spark.index.reader import IndexReader
+from miru_spark.plans.search import (
+    _chunk_bounds,
+    _contribs,
+    _drop_tombstones,
+    _keep_chunks_by_key,
+    _kth_largest,
+    _margin,
+    _postings_with_df,
+    _ranked,
+    _sum_by_doc,
+    _top_k,
+    _where_ids,
+    phrase_survivor_keys,
+    phrase_verified_docs_df,
+    survivor_docs,
+)
 
 # ---------------------------------------------------------------------------
 # AST
@@ -350,8 +364,6 @@ class _Env:
             if t not in self.tps:
                 self._phrase[tokens] = empty
                 return empty
-        from miru_spark.plans.search import phrase_survivor_keys, survivor_docs
-
         cand = self._pos[uterms[0]][0]
         for t in uterms[1:]:
             cand = np.intersect1d(cand, self._pos[t][0], assume_unique=True)
@@ -381,13 +393,10 @@ def _eval(node: Node, env: _Env) -> tuple[np.ndarray, np.ndarray]:
         return env.phrase_docs(node.tokens)
     if isinstance(node, BOr):
         parts = [_eval(c, env) for c in node.children]
-        all_ids = np.concatenate([p[0] for p in parts])
-        if all_ids.size == 0:
-            return all_ids.astype(np.int64), np.empty(0)
-        all_scores = np.concatenate([p[1] for p in parts])
-        uids, inv = np.unique(all_ids, return_inverse=True)
-        agg = np.zeros(uids.size)
-        np.add.at(agg, inv, all_scores)
+        uids, agg, _ = _sum_by_doc(
+            np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] for p in parts]),
+        )
         return uids, agg
     if isinstance(node, BAnd):
         pos = [c for c in node.children if not isinstance(c, BNot)]
@@ -473,23 +482,11 @@ def search_bool(
         incl = reader.filter_doc_ids(where)
         keep = np.isin(ids, incl, assume_unique=True)
         ids, scores = ids[keep], scores[keep]
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((ids, -scores))[:k]
-    return [(int(ids[i]), float(scores[i])) for i in order]
+    return _top_k(ids, scores, k, round_digits)
 
 
 # ---------------------------------------------------------------------------
 # Distributed evaluation (Catalyst expressions over one pivoted hash agg)
-
-_SCORED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("contrib", T.DoubleType()),
-    ]
-)
-
 
 def _match_col(
     node: Node, col: dict[str, str], pcol: dict[tuple, str] | None = None
@@ -638,37 +635,17 @@ def _tree_blockmax_prune(
       live range) and is scored exactly, while dropped docs score (and
       display, if they still match) strictly below theta - margin.
     """
-    from miru_spark.functions import bm25 as _bm25
     from miru_spark.plans.chunkprune import interval_values, range_max
-    from miru_spark.plans.search import (
-        _keep_chunks_by_key,
-        _margin,
-        chunk_lower_col,
-        chunk_upper_col,
-    )
 
     pos, negset, has_not, min_boost = _classify_leaves(node)
     prunable = [t for t in pos if t not in negset]
     stats: dict = {"pruned": False, "theta": 0.0, "bound": "tree-bmm"}
     if not prunable or min_boost < 0.0:
         return chunks, stats
-    idf = _bm25.idf_col(F.col("df_global").cast("double"), F.lit(float(n_docs)))
-    meta = chunks.select(
-        F.col("term"),
-        F.col("first_docid"),
-        F.col("last_docid"),
-        (idf * chunk_upper_col(avgdl)).alias("__ub"),
-        (idf * chunk_lower_col(avgdl)).alias("__lb"),
-    )
-    cap = 1 << 20
-    rows = meta.limit(cap + 1).collect()
-    if len(rows) > cap or not rows:
+    _, _, arrays = _chunk_bounds(chunks, n_docs, avgdl)
+    if arrays is None or arrays[0].size == 0:
         return chunks, stats
-    terms_a = np.array([r["term"] for r in rows], dtype=object)
-    lo_a = np.array([r["first_docid"] for r in rows], dtype=np.int64)
-    hi_a = np.array([r["last_docid"] for r in rows], dtype=np.int64)
-    ub_a = np.array([r["__ub"] for r in rows], dtype=np.float64)
-    lb_a = np.array([r["__lb"] for r in rows], dtype=np.float64)
+    terms_a, lo_a, hi_a, ub_a, lb_a = arrays
     pos_mask = np.isin(terms_a, np.array(sorted(pos), dtype=object))
     if not pos_mask.any():
         return chunks, stats
@@ -734,16 +711,13 @@ def _tree_blockmax_prune(
 
     theta = 0.0
     if allow_theta and not has_not and k is not None:
-        kth: dict[str, float] = {}
-        for t in _sufficient_terms(node) & set(prunable):
-            ls = lb_a[terms_a == t]
-            if ls.size >= k:
-                kth[t] = float(np.partition(ls, ls.size - k)[ls.size - k])
-        theta = max((pos[t] * v for t, v in kth.items()), default=0.0)
+        suff = _sufficient_terms(node) & set(prunable)
+        kth = _kth_largest(terms_a, lb_a, k)
+        theta = max((pos[t] * v for t, v in kth.items() if t in suff), default=0.0)
     stats["theta"] = theta
     thr = theta - _margin(round_digits, theta) if theta > 0.0 else 0.0
 
-    keep = np.ones(len(rows), dtype=bool)
+    keep = np.ones(terms_a.size, dtype=bool)
     for t in prunable:
         tm_idx = np.flatnonzero(terms_a == t)
         if tm_idx.size == 0:
@@ -762,7 +736,7 @@ def _tree_blockmax_prune(
                 np.zeros(tm_idx.size, dtype=np.int64),
             )
             keep[tm_idx] = win > 0.0
-    stats["chunks_total"] = int(len(rows))
+    stats["chunks_total"] = int(terms_a.size)
     stats["chunks_kept"] = int(keep.sum())
     if keep.all():
         return chunks, stats
@@ -802,14 +776,6 @@ def search_bool_distributed(
     terms, phrases = _leaf_terms(node)
     n_docs = float(reader.n_docs)
     avgdl = float(reader.avgdl)
-
-    from miru_spark.plans.search import (
-        _drop_tombstones,
-        _postings_with_df,
-        _where_ids,
-        bm25_contrib_gen,
-    )
-
     chunks, term_dfs = _postings_with_df(reader, terms)
 
     # windowed tree block-max prune (_tree_blockmax_prune): feasibility/
@@ -833,9 +799,7 @@ def search_bool_distributed(
                 chunks, node, k, n_docs, avgdl, round_digits, allow_theta
             )
 
-    scored = chunks.mapInArrow(
-        bm25_contrib_gen(n_docs, avgdl, emit_term=True), _SCORED_SCHEMA
-    )
+    scored = _contribs(chunks, n_docs, avgdl, emit_term=True)
     col = {t: f"c{i}" for i, t in enumerate(terms)}
     pivoted = scored.groupBy("doc_id").agg(
         *[
@@ -845,8 +809,6 @@ def search_bool_distributed(
     )
     pcol: dict[tuple, str] = {p: f"pv{i}" for i, p in enumerate(phrases)}
     for p in phrases:
-        from miru_spark.plans.search import phrase_verified_docs_df
-
         verified = phrase_verified_docs_df(reader, p)
         if verified is None:  # a phrase term is absent: no doc matches it
             pivoted = pivoted.withColumn(pcol[p], F.lit(None).cast("boolean"))
@@ -858,13 +820,7 @@ def search_bool_distributed(
     if where:
         out = out.join(_where_ids(reader, where), "doc_id", "left_semi")
     out = _drop_tombstones(reader, out)
-    score = _score_col(node, col, pcol)
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    out = out.select("doc_id", score.alias("score"))
-    if k is None:
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _ranked(out, k, round_digits, score=_score_col(node, col, pcol))
 
 
 # ---------------------------------------------------------------------------
@@ -1082,10 +1038,7 @@ def search_boosting(
         incl = reader.filter_doc_ids(where)
         keep = np.isin(ids, incl, assume_unique=True)
         ids, scores = ids[keep], scores[keep]
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((ids, -scores))[:k]
-    return [(int(ids[i]), float(scores[i])) for i in order]
+    return _top_k(ids, scores, k, round_digits)
 
 
 def boosting_oracle_sql(

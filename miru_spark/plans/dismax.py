@@ -36,17 +36,22 @@ corpus size.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from miru_spark.functions import bm25
 from miru_spark.index.reader import IndexReader
 from miru_spark.plans.multifield import _norm_weights
+from miru_spark.plans.search import (
+    _drop_tombstones,
+    _field_contribs,
+    _ranked,
+    _sum_by_doc,
+    _top_k,
+    _where_ids,
+    _with_tombstones,
+)
 
 
 def _check_tb(tie_breaker: float) -> float:
@@ -68,8 +73,6 @@ def search_fields_dismax(
     """Driver fast path: per-field pruned fetch + vectorized decode, one
     per-field score array, then a vectorized max/sum combine. Top-k by
     (-score, doc_id)."""
-    from miru_spark.plans.search import _with_tombstones
-
     if mode not in ("disjunctive", "conjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     terms = list(dict.fromkeys(terms))
@@ -101,9 +104,9 @@ def search_fields_dismax(
             )
         if not ids_parts:
             continue
-        uids, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
-        agg = np.zeros(uids.size)
-        np.add.at(agg, inv, np.concatenate(sc_parts))
+        uids, agg, _ = _sum_by_doc(
+            np.concatenate(ids_parts), np.concatenate(sc_parts)
+        )
         if mode == "conjunctive":
             keep = np.ones(uids.size, dtype=bool)
             for tids in per_term:
@@ -130,19 +133,7 @@ def search_fields_dismax(
     if where:
         incl = next(iter(readers.values())).filter_doc_ids(where)
         keep &= np.isin(uids, incl, assume_unique=True)
-    uids, score = uids[keep], score[keep]
-    order = np.lexsort((uids, -score))[:k]
-    return [(int(uids[i]), float(score[i])) for i in order]
-
-
-_DM_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("field", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("contrib", T.DoubleType()),
-    ]
-)
+    return _top_k(uids[keep], score[keep], k)
 
 
 def search_fields_dismax_distributed(
@@ -159,13 +150,8 @@ def search_fields_dismax_distributed(
     decode+score tagged with the field name -> union -> hash agg by
     (doc_id, field) = per-field subquery score + distinct-term match count
     -> per-field AND filter (conjunctive) -> hash agg by doc_id for the
-    max + tie_breaker * rest combine. Both aggs partial-combine map-side."""
-    from miru_spark.plans.search import (
-        _postings_with_df,
-        _where_ids,
-        bm25_contrib_gen,
-    )
-
+    max + tie_breaker * rest combine. Both aggs partial-combine map-side.
+    Tombstones are the union across field indexes."""
     if mode not in ("disjunctive", "conjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     terms = list(dict.fromkeys(terms))
@@ -174,32 +160,12 @@ def search_fields_dismax_distributed(
     w = _norm_weights(readers, weights)
     tb = _check_tb(tie_breaker)
 
-    scored_parts = []
-    tomb_parts = []
-    spark = next(iter(readers.values())).spark
-    for fname, reader in readers.items():
-        if reader.tombstones_df() is not None:
-            tomb_parts.append(reader.tombstones_df())
-        if w[fname] == 0.0:
-            continue
-        n_docs = float(reader.n_docs)
-        avgdl = float(reader.avgdl)
-        weight = w[fname]
-        chunks, _ = _postings_with_df(reader, terms)
-        score_chunks = bm25_contrib_gen(
-            n_docs, avgdl, weight=weight, emit_term=True, field_tag=fname
-        )
-
-        scored_parts.append(chunks.mapInArrow(score_chunks, _DM_SCHEMA))
-
-    if not scored_parts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    scored = scored_parts[0]
-    for p in scored_parts[1:]:
-        scored = scored.unionByName(p)
+    first = next(iter(readers.values()))
+    scored = _field_contribs(readers, terms, w, tag_fields=True)
+    if scored is None:
+        return first.spark.createDataFrame([], "doc_id long, score double")
     if where:
-        allow = _where_ids(next(iter(readers.values())), where)
-        scored = scored.join(allow, "doc_id", "left_semi")
+        scored = scored.join(_where_ids(first, where), "doc_id", "left_semi")
     per_field = scored.groupBy("doc_id", "field").agg(
         F.sum("contrib").alias("s_f"),
         F.countDistinct("term").alias("nterm"),
@@ -209,12 +175,11 @@ def search_fields_dismax_distributed(
     combined = per_field.groupBy("doc_id").agg(
         F.max("s_f").alias("mx"), F.sum("s_f").alias("sm")
     )
-    score_col = F.col("mx") + F.lit(tb) * (F.col("sm") - F.col("mx"))
-    if round_digits is not None:
-        score_col = F.round(score_col, round_digits)
-    out = combined.select("doc_id", score_col.alias("score"))
-    for tomb in tomb_parts:
-        out = out.join(tomb, "doc_id", "left_anti")
-    if k is None:
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    score = F.col("mx") + F.lit(tb) * (F.col("sm") - F.col("mx"))
+    out = _ranked(combined, None, round_digits, score=score)
+    # tombstones after the combine: applied to ``combined``, Catalyst would
+    # push the hinted anti-joins below both aggregates into every field's
+    # branch of the union, multiplying the joins by the field count
+    for reader in readers.values():
+        out = _drop_tombstones(reader, out)
+    return _ranked(out, k, None)

@@ -424,7 +424,7 @@ def search_intervals(
     filters).
     """
     global LAST_ROUTE
-    from miru_spark.plans.search import _with_tombstones
+    from miru_spark.plans.search import _top_k, _with_tombstones
 
     if strategy not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -531,10 +531,7 @@ def search_intervals(
         m = np.isin(v, ids, assume_unique=True)
         idx = np.searchsorted(ids, v[m])
         scores[m] += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((v, -scores))[:k]
-    return [(int(v[i]), float(scores[i])) for i in order]
+    return _top_k(v, scores, k, round_digits)
 
 
 def _sql_quote(t: str) -> str:
@@ -650,76 +647,32 @@ def search_intervals_distributed(
     hash partitioning end-to-end."""
     from pyspark.sql import DataFrame  # noqa: F401 (doc type)
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    import pyarrow as pa
-
-    from miru_spark.plans.search import search_distributed
+    from miru_spark.plans.search import (
+        _occurrences,
+        _phrase_starts,
+        search_distributed,
+    )
 
     if not reader.positions:
         raise ValueError(
             "interval queries need a positional index (positions=True)"
         )
     terms = leaf_terms(spec)
-    spark = reader.spark
     chunks = reader.postings_df(terms)
-
-    occ_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("pos", T.LongType())]
-    )
-
-    def occ(term: str):
-        def emit(batches):
-            from miru_spark.index.format import unpack_chunk_np, unpack_positions
-            from miru_spark.plans.search import _chunk_batch_views
-
-            for batch in batches:
-                blob_col, codec_np, offs, ns, og, ot, od, lasts = (
-                    _chunk_batch_views(batch)
-                )
-                pos_col = batch.column(batch.schema.names.index("pos_blob"))
-                for i in range(batch.num_rows):
-                    s, e = int(offs[i]), int(offs[i + 1])
-                    ids, tfs, _ = unpack_chunk_np(
-                        blob_col[i].as_buffer(),
-                        ns[s:e], og[s:e], ot[s:e], od[s:e], lasts[s:e],
-                        int(codec_np[i]),
-                    )
-                    pos = unpack_positions(
-                        pos_col[i].as_buffer(), tfs
-                    ).astype(np.int64)
-                    doc_rep = np.repeat(
-                        ids.astype(np.int64), tfs.astype(np.int64)
-                    )
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(doc_rep), pa.array(pos)],
-                        names=["doc_id", "pos"],
-                    )
-
-        return chunks.filter(F.col("term") == term).mapInArrow(emit, occ_schema)
-
     ctr = [0]
 
     def rel(node):
         """(doc_id, s, e) frame of the node's satisfying intervals."""
         if isinstance(node, ITerm):
-            return occ(node.term).select(
+            return _occurrences(chunks, node.term).select(
                 "doc_id", F.col("pos").alias("s"), F.col("pos").alias("e")
             )
         if isinstance(node, IPhrase):
-            n = len(node.terms)
-            cand = occ(node.terms[0]).select(
-                "doc_id", F.col("pos").alias("adj")
-            )
-            for off in range(1, n):
-                nxt = occ(node.terms[off]).select(
-                    "doc_id", (F.col("pos") - off).alias("adj")
-                )
-                cand = cand.join(nxt, ["doc_id", "adj"], "inner")
-            return cand.select(
+            return _phrase_starts(chunks, node.terms).select(
                 "doc_id",
                 F.col("adj").alias("s"),
-                (F.col("adj") + (n - 1)).alias("e"),
+                (F.col("adj") + (len(node.terms) - 1)).alias("e"),
             )
         if isinstance(node, IAnyOf):
             out = rel(node.children[0])

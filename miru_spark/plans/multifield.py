@@ -29,15 +29,24 @@ from __future__ import annotations
 
 import json
 import os
+from functools import reduce
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from miru_spark.functions import bm25
 from miru_spark.index.reader import IndexReader
+from miru_spark.plans.search import (
+    _contribs,
+    _drop_tombstones,
+    _field_contribs,
+    _ranked,
+    _sum_by_doc,
+    _top_k,
+    _where_ids,
+    _with_tombstones,
+)
 
 
 def default_field_exprs() -> dict:
@@ -115,8 +124,6 @@ def search_fields(
     expected to be applied to every field, but a half-applied delete must
     still never serve the doc).
     """
-    from miru_spark.plans.search import _with_tombstones
-
     if mode not in ("disjunctive", "conjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     terms = list(dict.fromkeys(terms))
@@ -147,9 +154,7 @@ def search_fields(
         return []  # some term occurs in no field
     if not acc_ids:
         return []
-    uids, inv = np.unique(np.concatenate(acc_ids), return_inverse=True)
-    agg = np.zeros(uids.size)
-    np.add.at(agg, inv, np.concatenate(acc_scores))
+    uids, agg, _ = _sum_by_doc(np.concatenate(acc_ids), np.concatenate(acc_scores))
     keep = np.ones(uids.size, dtype=bool)
     if mode == "conjunctive":
         for t in terms:
@@ -160,9 +165,7 @@ def search_fields(
     if where:
         incl = next(iter(readers.values())).filter_doc_ids(where)
         keep &= np.isin(uids, incl, assume_unique=True)
-    uids, agg = uids[keep], agg[keep]
-    order = np.lexsort((uids, -agg))[:k]
-    return [(int(uids[i]), float(agg[i])) for i in order]
+    return _top_k(uids[keep], agg[keep], k)
 
 
 def search_fields_cross(
@@ -187,8 +190,6 @@ def search_fields_cross(
     term in SOME field — 'john smith' over (first, last) name fields
     matches john in one field + smith in the other, the document both
     most_fields/AND and best_fields/AND reject."""
-    from miru_spark.plans.search import _with_tombstones
-
     if mode not in ("disjunctive", "conjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     terms = list(dict.fromkeys(terms))
@@ -232,9 +233,9 @@ def search_fields_cross(
         per_term_sets[t] = uids_t
     if not term_ids:
         return []
-    uids, inv = np.unique(np.concatenate(term_ids), return_inverse=True)
-    agg = np.zeros(uids.size)
-    np.add.at(agg, inv, np.concatenate(term_scores))
+    uids, agg, _ = _sum_by_doc(
+        np.concatenate(term_ids), np.concatenate(term_scores)
+    )
     keep = np.ones(uids.size, dtype=bool)
     if mode == "conjunctive":
         for t in terms:
@@ -244,9 +245,7 @@ def search_fields_cross(
     if where:
         incl = next(iter(readers.values())).filter_doc_ids(where)
         keep &= np.isin(uids, incl, assume_unique=True)
-    uids, agg = uids[keep], agg[keep]
-    order = np.lexsort((uids, -agg))[:k]
-    return [(int(uids[i]), float(agg[i])) for i in order]
+    return _top_k(uids[keep], agg[keep], k)
 
 
 def search_fields_combined(
@@ -308,35 +307,14 @@ def search_fields_combined(
         w[f] * float(r.avgdl) for f, r in readers.items() if w[f] != 0.0
     )
 
-    wtf_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("term", T.StringType()),
-            T.StructField("wtf", T.DoubleType()),
-        ]
-    )
-
-    from miru_spark.plans.search import (
-        _drop_tombstones,
-        _where_ids,
-        bm25_contrib_gen,
-    )
-
-    parts = []
-    for fname, reader in readers.items():
-        if w[fname] == 0.0:
-            continue
-        parts.append(
-            reader.postings_df(terms).mapInArrow(
-                bm25_contrib_gen(
-                    n_docs, float(reader.avgdl), weight=w[fname],
-                    emit_term=True, raw_tf=True, value_name="wtf",
-                ),
-                wtf_schema,
-            )
+    parts = [
+        _contribs(
+            reader.postings_df(terms), n_docs, float(reader.avgdl),
+            weight=w[fname], emit_term=True, raw_tf=True, value_name="wtf",
         )
-    from functools import reduce
-
+        for fname, reader in readers.items()
+        if w[fname] != 0.0
+    ]
     tfc = (
         reduce(lambda a, b: a.unionByName(b), parts)
         .groupBy("doc_id", "term")
@@ -397,25 +375,7 @@ def search_fields_combined(
     # kills the doc, matching search_fields_distributed)
     for reader in readers.values():
         agg = _drop_tombstones(reader, agg)
-    score = (
-        F.round(F.col("score"), round_digits)
-        if round_digits is not None
-        else F.col("score")
-    )
-    return (
-        agg.select("doc_id", score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-_MF_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("contrib", T.DoubleType()),
-    ]
-)
+    return _ranked(agg, k, round_digits)
 
 
 def search_fields_distributed(
@@ -430,58 +390,25 @@ def search_fields_distributed(
     """Cluster path: per-field pruned postings scans -> mapInArrow
     decode+score (weighted) -> UNION -> one hash agg by doc_id.
     Conjunctive counts DISTINCT matched terms across fields, so a term
-    present in several fields satisfies the requirement once."""
-    from miru_spark.plans.search import (
-        _postings_with_df,
-        _where_ids,
-        bm25_contrib_gen,
-    )
-
+    present in several fields satisfies the requirement once. Tombstones
+    are the union across field indexes."""
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("empty term list")
     w = _norm_weights(readers, weights)
 
-    scored_parts = []
-    tomb_parts = []
-    spark = next(iter(readers.values())).spark
-    for fname, reader in readers.items():
-        if reader.tombstones_df() is not None:
-            tomb_parts.append(reader.tombstones_df())
-        if w[fname] == 0.0:
-            continue
-        n_docs = float(reader.n_docs)
-        avgdl = float(reader.avgdl)
-        weight = w[fname]
-        chunks, _ = _postings_with_df(reader, terms)
-        score_chunks = bm25_contrib_gen(
-            n_docs, avgdl, weight=weight, emit_term=True
-        )
-
-        scored_parts.append(chunks.mapInArrow(score_chunks, _MF_SCHEMA))
-
-    if not scored_parts:
-        return spark.createDataFrame([], "doc_id long, score double")
-    scored = scored_parts[0]
-    for p in scored_parts[1:]:
-        scored = scored.unionByName(p)
+    first = next(iter(readers.values()))
+    scored = _field_contribs(readers, terms, w, tag_fields=False)
+    if scored is None:
+        return first.spark.createDataFrame([], "doc_id long, score double")
     if where:
-        allow = _where_ids(next(iter(readers.values())), where)
-        scored = scored.join(allow, "doc_id", "left_semi")
+        scored = scored.join(_where_ids(first, where), "doc_id", "left_semi")
     agg = scored.groupBy("doc_id").agg(
         F.sum("contrib").alias("score"),
         F.countDistinct("term").alias("nterm"),
     )
     if mode == "conjunctive":
         agg = agg.filter(F.col("nterm") == len(terms))
-    for tomb in tomb_parts:
-        agg = agg.join(tomb, "doc_id", "left_anti")
-    score = (
-        F.round(F.col("score"), round_digits)
-        if round_digits is not None
-        else F.col("score")
-    )
-    out = agg.select("doc_id", score.alias("score"))
-    if k is None:
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    for reader in readers.values():
+        agg = _drop_tombstones(reader, agg)
+    return _ranked(agg, k, round_digits)

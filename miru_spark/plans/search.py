@@ -13,6 +13,13 @@ Three paths, all rank-identical by construction and by test:
   chunk rows (mapInArrow decode -> groupBy(doc_id) -> top-k); the path you run
   when a query's candidate set is too large to collect (cluster-scale OR of
   hot terms), and the one the DuckDB oracle checks directly.
+
+Every distributed scorer (here, booltree, dismax, multifield) is a thin
+finisher over one shared core: ``_contribs`` (decode + score chunk rows to
+contribution rows, schema derived from the generator's flags),
+``_field_contribs`` (the same per field index, unioned), ``_ranked`` (round,
+keyset cursor, score desc / doc_id asc, limit) and ``_chunk_bounds`` (the
+block-max metadata collect behind all three chunk pruners).
 """
 
 from __future__ import annotations
@@ -20,11 +27,12 @@ from __future__ import annotations
 import heapq
 import re
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -2702,9 +2710,7 @@ def search_sharded(
         excl = np.unique(np.concatenate(excl_parts))
         keep = ~np.isin(uids, excl)
         uids, agg = uids[keep], agg[keep]
-    if round_digits is not None:
-        agg = np.round(agg, round_digits)
-    return _top_k(uids, agg, k)
+    return _top_k(uids, agg, k, round_digits)
 
 
 def search_exhaustive(
@@ -2827,17 +2833,24 @@ def _sum_sparse(ids: np.ndarray, scores: np.ndarray):
     return uids, agg, cnt
 
 
-def _top_k(uids: np.ndarray, agg: np.ndarray, k: int) -> list[tuple[int, float]]:
+def _top_k(
+    uids: np.ndarray, agg: np.ndarray, k: int, round_digits: int | None = None
+) -> list[tuple[int, float]]:
     """The k best (doc id, score) pairs in the full ``lexsort`` order: score
-    descending, doc id ascending on ties. Only the scores at or above the
-    k-th best are sorted; every tie at the k-th score is kept, so for
-    finite scores (BM25 sums are) the cut cannot change which doc ids win.
-    A NaN is not supported: ``np.partition`` ranks it above every score,
-    while the full sort ranks it last."""
+    descending, doc id ascending on ties, after rounding the scores to
+    ``round_digits`` when given. Only the scores at or above the k-th best
+    are sorted; every tie at the k-th score is kept, so a cut that keeps
+    at least k scores holds the full sort's winners. ``np.partition`` ranks
+    a NaN above every score (the full sort ranks it last), so with NaNs
+    the k-th value can overshoot; a cut keeping fewer than k is skipped.
+    The result equals the full sort for any float input."""
+    if round_digits is not None:
+        agg = np.round(agg, round_digits)
     if 0 < k < uids.size:
         kth = np.partition(agg, uids.size - k)[uids.size - k]
         keep = agg >= kth
-        uids, agg = uids[keep], agg[keep]
+        if np.count_nonzero(keep) >= k:
+            uids, agg = uids[keep], agg[keep]
     order = np.lexsort((uids, -agg))[:k]
     return [(int(uids[i]), float(agg[i])) for i in order]
 
@@ -3002,10 +3015,7 @@ def search_phrase(
         ids, tfs, dls, _ = data[t]
         idx = np.searchsorted(ids, verified)
         scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((verified, -scores))[:k]
-    return [(int(verified[i]), float(scores[i])) for i in order]
+    return _top_k(verified, scores, k, round_digits)
 
 
 def search_phrase_prefix(
@@ -3140,10 +3150,7 @@ def search_phrase_prefix(
         ids, tfs, dlst, _ = data[t]
         idx = np.searchsorted(ids, verified)
         scores += bm25.score_np(tfs[idx], tps[t].idf, dlst[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((verified, -scores))[:k]
-    return [(int(verified[i]), float(scores[i])) for i in order]
+    return _top_k(verified, scores, k, round_digits)
 
 
 def search_near(
@@ -3235,10 +3242,7 @@ def search_near(
         ids, tfs, dls, _ = data[t]
         idx = np.searchsorted(ids, verified)
         scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((verified, -scores))[:k]
-    return [(int(verified[i]), float(scores[i])) for i in order]
+    return _top_k(verified, scores, k, round_digits)
 
 
 def search_span_first(
@@ -3296,10 +3300,7 @@ def search_span_first(
         return []
     idx = np.searchsorted(ids, verified)
     scores = bm25.score_np(tfs[idx], tps[term].idf, dls[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((verified, -scores))[:k]
-    return [(int(verified[i]), float(scores[i])) for i in order]
+    return _top_k(verified, scores, k, round_digits)
 
 
 def search_span_not(
@@ -3383,10 +3384,7 @@ def search_span_not(
         return []
     idx = np.searchsorted(ids_a, verified)
     scores = bm25.score_np(tfs_a[idx], tps[term].idf, dls_a[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((verified, -scores))[:k]
-    return [(int(verified[i]), float(scores[i])) for i in order]
+    return _top_k(verified, scores, k, round_digits)
 
 
 def _span_enclosure_docs(
@@ -3495,10 +3493,7 @@ def _span_enclosure_topk(
         ids, tfs, dls, _ = data[t]
         idx = np.searchsorted(ids, verified)
         scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((verified, -scores))[:k]
-    return [(int(verified[i]), float(scores[i])) for i in order]
+    return _top_k(verified, scores, k, round_digits)
 
 
 def search_span_within(
@@ -3818,10 +3813,7 @@ def search_phrase_sloppy(
         ids, tfs, dls, _ = data[t]
         idx = np.searchsorted(ids, v)
         scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((v, -scores))[:k]
-    return [(int(v[i]), float(scores[i])) for i in order]
+    return _top_k(v, scores, k, round_digits)
 
 
 def search_lm(
@@ -3894,10 +3886,7 @@ def search_lm(
         scores[m] += bm25.lm_dirichlet_np(
             tfs[idx], float(tfs.sum()), dls[idx], n_tokens, mu
         )
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((universe, -scores))[:k]
-    return [(int(universe[i]), float(scores[i])) for i in order]
+    return _top_k(universe, scores, k, round_digits)
 
 
 def search_classic(
@@ -3964,25 +3953,69 @@ def search_classic(
         m = np.isin(universe, ids, assume_unique=True)
         idx = np.searchsorted(ids, universe[m])
         scores[m] += bm25.classic_np(tfs[idx], float(ids.size), dls[idx], n_docs)
-    if round_digits is not None:
-        scores = np.round(scores, round_digits)
-    order = np.lexsort((universe, -scores))[:k]
-    return [(int(universe[i]), float(scores[i])) for i in order]
+    return _top_k(universe, scores, k, round_digits)
+
+
+_OCC_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("pos", T.LongType())]
+)
+
+
+def _occurrences(chunks: DataFrame, term: str) -> DataFrame:
+    """(doc_id, pos) for every occurrence of ``term`` in a positional chunk
+    scan: mapInArrow decode of the term's rows plus their ``pos_blob``.
+    The occurrence frame of every distributed positional plan (phrase
+    verify, boolean-tree phrase leaves, interval queries)."""
+
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from miru_spark.index.format import unpack_chunk_np, unpack_positions
+
+        for batch in batches:
+            blob_col, codec_np, offs, ns, og, ot, od, lasts = _chunk_batch_views(
+                batch
+            )
+            pos_col = batch.column(batch.schema.names.index("pos_blob"))
+            for i in range(batch.num_rows):
+                s, e = int(offs[i]), int(offs[i + 1])
+                ids, tfs, _ = unpack_chunk_np(
+                    blob_col[i].as_buffer(),
+                    ns[s:e], og[s:e], ot[s:e], od[s:e], lasts[s:e],
+                    int(codec_np[i]),
+                )
+                pos = unpack_positions(pos_col[i].as_buffer(), tfs)
+                doc_rep = np.repeat(ids.astype(np.int64), tfs.astype(np.int64))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(doc_rep), pa.array(pos.astype(np.int64))],
+                    names=["doc_id", "pos"],
+                )
+
+    return chunks.filter(F.col("term") == term).mapInArrow(emit, _OCC_SCHEMA)
+
+
+def _phrase_starts(chunks: DataFrame, seq) -> DataFrame:
+    """(doc_id, adj) for every start position ``adj`` at which the token
+    sequence ``seq`` occurs consecutively: offset j's occurrences shift to
+    ``pos - j`` and chained inner joins on (doc_id, adj) keep the starts
+    where every offset aligns. ``chunks`` is a positional scan holding
+    every term of ``seq``."""
+    cand = _occurrences(chunks, seq[0]).select("doc_id", F.col("pos").alias("adj"))
+    for off in range(1, len(seq)):
+        nxt = _occurrences(chunks, seq[off]).select(
+            "doc_id", (F.col("pos") - off).alias("adj")
+        )
+        cand = cand.join(nxt, ["doc_id", "adj"], "inner")
+    return cand
 
 
 def phrase_verified_docs_df(
     reader: IndexReader, seq: list[str] | tuple[str, ...]
 ) -> DataFrame | None:
     """Distinct doc_ids containing the exact consecutive token sequence,
-    as a pure DataFrame plan — the distributed positional phrase verify.
-
-    For each phrase offset j the positional chunks of term_j emit
-    (doc_id, pos - j) occurrence keys (mapInArrow decode, pruned scan);
-    chained inner joins on (doc_id, adj) leave exactly the docs where some
-    start position aligns every term. Returns None when a phrase term is
-    absent from the index (no doc can match). Shared by
-    :func:`search_phrase_distributed` and the boolean-tree distributed
-    plan's phrase leaves (booltree.py)."""
+    as a pure DataFrame plan — the distributed positional phrase verify
+    (``_phrase_starts`` over the phrase terms' pruned scan). Returns
+    None when a phrase term is absent from the index (no doc can match).
+    Shared by :func:`search_phrase_distributed` and the boolean-tree
+    distributed plan's phrase leaves (booltree.py)."""
     if not reader.positions:
         raise ValueError(
             "phrase search needs a positional index (build_index(positions=True))"
@@ -3992,44 +4025,7 @@ def phrase_verified_docs_df(
     present = {r["term"] for r in chunks.select("term").distinct().collect()}
     if len(present) < len(uterms):
         return None
-
-    occ_schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("adj", T.LongType())]
-    )
-
-    def occurrences(term: str, off: int):
-        def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            from miru_spark.index.format import unpack_chunk_np, unpack_positions
-
-            for batch in batches:
-                blob_col, codec_np, offs, ns, og, ot, od, lasts = (
-                    _chunk_batch_views(batch)
-                )
-                pos_col = batch.column(batch.schema.names.index("pos_blob"))
-                for i in range(batch.num_rows):
-                    s, e = int(offs[i]), int(offs[i + 1])
-                    ids, tfs, _ = unpack_chunk_np(
-                        blob_col[i].as_buffer(),
-                        ns[s:e], og[s:e], ot[s:e], od[s:e], lasts[s:e],
-                        int(codec_np[i]),
-                    )
-                    pos = unpack_positions(
-                        pos_col[i].as_buffer(), tfs
-                    ).astype(np.int64)
-                    doc_rep = np.repeat(ids.astype(np.int64), tfs.astype(np.int64))
-                    adj = pos - off
-                    ok = adj >= 0
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(doc_rep[ok]), pa.array(adj[ok])],
-                        names=["doc_id", "adj"],
-                    )
-
-        return chunks.filter(F.col("term") == term).mapInArrow(emit, occ_schema)
-
-    cand = occurrences(seq[0], 0)
-    for off in range(1, len(seq)):
-        cand = cand.join(occurrences(seq[off], off), ["doc_id", "adj"], "inner")
-    return cand.select("doc_id").distinct()
+    return _phrase_starts(chunks, seq).select("doc_id").distinct()
 
 
 def search_phrase_distributed(
@@ -4050,24 +4046,49 @@ def search_phrase_distributed(
     if not seq:
         raise ValueError("empty phrase")
     uterms = list(dict.fromkeys(seq))
-    spark = reader.spark
     verified = phrase_verified_docs_df(reader, seq)
     if verified is None:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return reader.spark.createDataFrame([], "doc_id long, score double")
     scored = search_distributed(
         reader, uterms, mode="conjunctive", k=None, round_digits=None
     )
-    score = (
-        F.round(F.col("score"), round_digits)
-        if round_digits is not None
-        else F.col("score")
-    )
-    return (
-        scored.join(verified, "doc_id", "left_semi")
-        .select("doc_id", score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _ranked(scored.join(verified, "doc_id", "left_semi"), k, round_digits)
+
+
+def _rounded(score, round_digits: int | None):
+    """``score`` rounded to ``round_digits`` (unchanged when None)."""
+    return score if round_digits is None else F.round(score, round_digits)
+
+
+def _ranked(
+    df: DataFrame,
+    k: int | None,
+    round_digits: int | None,
+    score=None,
+    after: tuple[float, int] | None = None,
+) -> DataFrame:
+    """The Spark rank rule every distributed scorer ends with: (doc_id,
+    score) with ``score`` (default: the ``score`` column) rounded to
+    ``round_digits``, strictly after the optional ``after`` keyset cursor,
+    ordered by score descending then doc_id ascending and cut to ``k``;
+    ``k=None`` returns the unsorted set (internal callers rank later)."""
+    score = F.col("score") if score is None else score
+    out = df.select("doc_id", _rounded(score, round_digits).alias("score"))
+    if after is not None:
+        # A38 keyset pagination on the cluster path: strictly-after the
+        # (score, doc_id) cursor in rank order, compared on the SAME
+        # rounded value the ordering uses — a codegen filter ahead of the
+        # TakeOrderedAndProject, so page depth never changes the plan cost
+        if k is None:
+            raise ValueError("after needs a top-k query (k is None)")
+        s_a, d_a = float(after[0]), int(after[1])
+        out = out.filter(
+            (F.col("score") < s_a)
+            | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
+        )
+    if k is None:
+        return out
+    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 _DOCID_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
@@ -4107,15 +4128,15 @@ def bm25_contrib_gen(
     raw_tf: bool = False,
     value_name: str = "contrib",
 ):
-    """THE chunk decode-and-score mapInArrow generator, shared by every
-    distributed scorer (single/batched search, boolean trees, dis_max,
-    most_fields, combined_fields) — one zero-copy body instead of six
-    drifting copies. Per chunk row: numpy-view the block metadata
-    (:func:`_chunk_batch_views`), decode via ``unpack_chunk_np``, emit
-    one Arrow batch of (doc_id[, field][, term], value) rows where value
-    is the BM25 contribution (idf from the row's ``df_global``, optional
-    per-term boost, optional field weight) — or the weighted raw tf when
-    ``raw_tf`` (combined_fields accumulates tf before saturating)."""
+    """THE chunk decode-and-score mapInArrow generator behind ``_contribs``,
+    the one core of every distributed scorer (single/batched search,
+    boolean trees, dis_max, most_fields, combined_fields). Per chunk row:
+    numpy-view the block metadata (:func:`_chunk_batch_views`), decode via
+    ``unpack_chunk_np``, emit one Arrow batch of (doc_id[, field][, term],
+    value) rows where value is the BM25 contribution (idf from the row's
+    ``df_global``, optional per-term boost, optional field weight) — or
+    the weighted raw tf when ``raw_tf`` (combined_fields accumulates tf
+    before saturating)."""
     boosts = dict(boost_map or {})
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -4166,29 +4187,71 @@ def bm25_contrib_gen(
     return gen
 
 
-def _ids_only_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Decode ONLY the doc_ids of chunk rows (skip tf/dl streams + scoring)."""
+def _contribs(chunks: DataFrame, n_docs: float, avgdl: float, **flags) -> DataFrame:
+    """Contribution rows of a chunk scan: ``mapInArrow`` of
+    :func:`bm25_contrib_gen` with ``flags``, under the output schema those
+    same flags select — (doc_id[, field][, term], contrib or
+    ``value_name``)."""
+    fields = [T.StructField("doc_id", T.LongType())]
+    if flags.get("field_tag") is not None:
+        fields.append(T.StructField("field", T.StringType()))
+    if flags.get("emit_term"):
+        fields.append(T.StructField("term", T.StringType()))
+    fields.append(T.StructField(flags.get("value_name", "contrib"), T.DoubleType()))
+    gen = bm25_contrib_gen(n_docs, avgdl, **flags)
+    return chunks.mapInArrow(gen, T.StructType(fields))
+
+
+def _field_contribs(
+    readers: dict[str, IndexReader], terms, w: dict[str, float], tag_fields: bool
+) -> DataFrame | None:
+    """(doc_id[, field], term, contrib) over several field indexes of one
+    corpus: each field's pruned scan scored under its own statistics and
+    weight ``w[field]`` (fields weighted 0 are skipped), tagged with the
+    field name when ``tag_fields``, unioned. None when every weight is 0."""
+    parts = [
+        _contribs(
+            _postings_with_df(reader, terms)[0],
+            float(reader.n_docs),
+            float(reader.avgdl),
+            weight=w[fname],
+            emit_term=True,
+            field_tag=fname if tag_fields else None,
+        )
+        for fname, reader in readers.items()
+        if w[fname] != 0.0
+    ]
+    return reduce(DataFrame.unionByName, parts) if parts else None
+
+
+def _chunk_ids(batch: pa.RecordBatch) -> Iterator[np.ndarray]:
+    """Each chunk row's doc ids (int64) — for varint chunks only the gaps
+    stream is decoded (no tf/dl streams, no scoring)."""
     from miru_spark.functions.codecs import varint_decode
     from miru_spark.index.format import delta_decode, unpack_chunk_np
 
-    for batch in batches:
-        blob_col, codec_np, offs, ns, og, ot, od, lasts = _chunk_batch_views(batch)
-        for i in range(batch.num_rows):
-            s, e = int(offs[i]), int(offs[i + 1])
-            blob = blob_col[i].as_buffer()
-            if int(codec_np[i]) == 1:  # varint: gaps stream only
-                total = int(ns[s:e].sum())
-                off = int(og[s]) if e > s else 0
-                gaps, _ = varint_decode(blob, off, count=total)
-                ids = delta_decode(gaps)
-            else:
-                ids, _, _ = unpack_chunk_np(
-                    blob, ns[s:e], og[s:e], ot[s:e], od[s:e], lasts[s:e],
-                    int(codec_np[i]),
-                )
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids.astype(np.int64))], names=["doc_id"]
+    blob_col, codec_np, offs, ns, og, ot, od, lasts = _chunk_batch_views(batch)
+    for i in range(batch.num_rows):
+        s, e = int(offs[i]), int(offs[i + 1])
+        blob = blob_col[i].as_buffer()
+        if int(codec_np[i]) == 1:  # varint: gaps stream only
+            total = int(ns[s:e].sum())
+            off = int(og[s]) if e > s else 0
+            gaps, _ = varint_decode(blob, off, count=total)
+            ids = delta_decode(gaps)
+        else:
+            ids, _, _ = unpack_chunk_np(
+                blob, ns[s:e], og[s:e], ot[s:e], od[s:e], lasts[s:e],
+                int(codec_np[i]),
             )
+        yield ids.astype(np.int64)
+
+
+def _ids_only_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Decode ONLY the doc_ids of chunk rows (skip tf/dl streams + scoring)."""
+    for batch in batches:
+        for ids in _chunk_ids(batch):
+            yield pa.RecordBatch.from_arrays([pa.array(ids)], names=["doc_id"])
 
 
 _DOCID_TERM_SCHEMA = T.StructType(
@@ -4199,30 +4262,11 @@ _DOCID_TERM_SCHEMA = T.StructType(
 def _ids_term_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """Like :func:`_ids_only_arrow` but keeps the chunk's term tag (for
     plans that need per-(doc, term) presence, e.g. adjacency_matrix)."""
-    from miru_spark.functions.codecs import varint_decode
-    from miru_spark.index.format import delta_decode, unpack_chunk_np
-
     for batch in batches:
-        blob_col, codec_np, offs, ns, og, ot, od, lasts = _chunk_batch_views(batch)
         terms = batch.column(batch.schema.names.index("term")).to_pylist()
-        for i in range(batch.num_rows):
-            s, e = int(offs[i]), int(offs[i + 1])
-            blob = blob_col[i].as_buffer()
-            if int(codec_np[i]) == 1:  # varint: gaps stream only
-                total = int(ns[s:e].sum())
-                off = int(og[s]) if e > s else 0
-                gaps, _ = varint_decode(blob, off, count=total)
-                ids = delta_decode(gaps)
-            else:
-                ids, _, _ = unpack_chunk_np(
-                    blob, ns[s:e], og[s:e], ot[s:e], od[s:e], lasts[s:e],
-                    int(codec_np[i]),
-                )
+        for term, ids in zip(terms, _chunk_ids(batch)):
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids.astype(np.int64)),
-                    pa.array([terms[i]] * len(ids), type=pa.string()),
-                ],
+                [pa.array(ids), pa.array([term] * len(ids), type=pa.string())],
                 names=["doc_id", "term"],
             )
 
@@ -4357,6 +4401,59 @@ def _keep_chunks_by_key(
     return chunks.join(F.broadcast(keys), ["term", "first_docid"], "left_semi")
 
 
+_META_CAP = 1 << 20  # chunk rows a pruner collects; past it, no collect
+
+
+def _chunk_bounds(
+    chunks: DataFrame, n_docs: float, avgdl: float, boost=None
+) -> tuple[DataFrame, object, tuple | None]:
+    """Per-chunk score bounds from block-max metadata alone, the input of
+    every chunk pruner. Returns (meta, ub_expr, arrays): ``meta`` is
+    (term, first_docid, last_docid, __ub, __lb) over ``chunks`` (which
+    carry ``df_global``), each bound idf [* ``boost``] times the chunk's
+    unscaled upper / achievable lower bound; ``ub_expr`` is the upper
+    bound as a column. ``arrays`` is (terms, firsts, lasts, ubs, lbs) as
+    numpy columns from one narrow job (metadata-column scan + project +
+    collect, no exchange; the parquet scan never touches the blob pages),
+    or None past ``_META_CAP`` rows — callers fall back rather than
+    collect an unbounded list."""
+    idf = bm25.idf_col(F.col("df_global").cast("double"), F.lit(float(n_docs)))
+    scale = idf if boost is None else idf * boost
+    ub_expr = scale * chunk_upper_col(avgdl)
+    meta = chunks.select(
+        F.col("term"),
+        F.col("first_docid"),
+        F.col("last_docid"),
+        ub_expr.alias("__ub"),
+        (scale * chunk_lower_col(avgdl)).alias("__lb"),
+    )
+    rows = meta.limit(_META_CAP + 1).collect()
+    if len(rows) > _META_CAP:
+        return meta, ub_expr, None
+    arrays = (
+        np.array([r["term"] for r in rows], dtype=object),
+        np.array([r["first_docid"] for r in rows], dtype=np.int64),
+        np.array([r["last_docid"] for r in rows], dtype=np.int64),
+        np.array([r["__ub"] for r in rows], dtype=np.float64),
+        np.array([r["__lb"] for r in rows], dtype=np.float64),
+    )
+    return meta, ub_expr, arrays
+
+
+def _kth_largest(terms: np.ndarray, vals: np.ndarray, k: int) -> dict[str, float]:
+    """Per term, the k-th largest of its chunk rows' ``vals``; terms with
+    fewer than k rows are absent. On chunk lower bounds this is the
+    per-term theta: one term's chunk rows cover disjoint doc ranges, so
+    its k-th largest lower bound is reached by k distinct docs."""
+    uniq, codes = np.unique(terms, return_inverse=True)
+    out = {}
+    for ti, t in enumerate(uniq):
+        v = vals[codes == ti]
+        if v.size >= k:
+            out[t] = float(np.partition(v, v.size - k)[v.size - k])
+    return out
+
+
 def _blockmax_prune(
     chunks: DataFrame,
     k: int,
@@ -4367,8 +4464,7 @@ def _blockmax_prune(
 ) -> tuple[DataFrame, dict]:
     """Filter chunk rows that provably cannot contribute to the disjunctive
     top-k. Returns (kept_chunks, stats); ``chunks`` must already carry
-    ``df_global``. One tiny metadata-only Spark job (term + frontier +
-    doc-range columns — the parquet scan never touches the blob pages)
+    ``df_global``. One tiny metadata-only Spark job (``_chunk_bounds``)
     establishes theta and per-chunk windowed upper bounds.
 
     The keep rule is the WINDOWED (BMM) bound from plans/chunkprune.py:
@@ -4383,7 +4479,6 @@ def _blockmax_prune(
 
     from miru_spark.plans.chunkprune import chunk_window_max
 
-    idf = bm25.idf_col(F.col("df_global").cast("double"), F.lit(float(n_docs)))
     if boost_map:
         pairs = []
         for t, b in boost_map.items():
@@ -4391,24 +4486,9 @@ def _blockmax_prune(
         boost = F.coalesce(F.create_map(*pairs)[F.col("term")], F.lit(1.0))
     else:
         boost = F.lit(1.0)
-    ub_expr = idf * boost * chunk_upper_col(avgdl)
-    lb_expr = idf * boost * chunk_lower_col(avgdl)
-    meta = chunks.select(
-        F.col("term"),
-        F.col("first_docid"),
-        F.col("last_docid"),
-        ub_expr.alias("__ub"),
-        lb_expr.alias("__lb"),
-    )
-    # one NARROW job (metadata-column scan + project + collect, no
-    # exchange): per-chunk rows are tiny, so the theta math and the
-    # window sweep run driver-side. The limit guards the pathological
-    # case (an ultra-hot many-term query with >1M chunk rows) by falling
-    # back to a per-term Spark aggregation — two tiny metadata shuffles
-    # instead of an unbounded collect.
-    cap = 1 << 20
-    rows = meta.limit(cap + 1).collect()
-    if len(rows) > cap:  # sum-UB fallback: per-term scalar thresholds
+    meta, ub_expr, arrays = _chunk_bounds(chunks, n_docs, avgdl, boost)
+    if arrays is None:  # sum-UB fallback: per-term scalar thresholds
+        # two tiny metadata shuffles instead of an unbounded collect
         w = Window.partitionBy("term").orderBy(F.desc("__lb"))
         kth = (
             meta.withColumn("__rn", F.row_number().over(w))
@@ -4448,29 +4528,16 @@ def _blockmax_prune(
         thr_col = F.create_map(*tpairs)[F.col("term")]
         return chunks.filter(ub_expr >= thr_col), stats
 
-    terms_a = np.array([r["term"] for r in rows], dtype=object)
-    lo_a = np.array([r["first_docid"] for r in rows], dtype=np.int64)
-    hi_a = np.array([r["last_docid"] for r in rows], dtype=np.int64)
-    ub_a = np.array([r["__ub"] for r in rows], dtype=np.float64)
-    lb_a = np.array([r["__lb"] for r in rows], dtype=np.float64)
+    terms_a, lo_a, hi_a, ub_a, lb_a = arrays
     uniq, codes = np.unique(terms_a, return_inverse=True)
-    ubmax = {}
-    theta = 0.0
-    for ti, t in enumerate(uniq):
-        m = codes == ti
-        ubmax[t] = float(ub_a[m].max())
-        ls = lb_a[m]
-        if ls.size >= k:
-            kth_lb = float(np.partition(ls, ls.size - k)[ls.size - k])
-            if kth_lb > theta:
-                theta = kth_lb
+    theta = max([0.0, *_kth_largest(terms_a, lb_a, k).values()])
     stats = {
         "theta": theta,
-        "ubmax": ubmax,
+        "ubmax": {t: float(ub_a[codes == ti].max()) for ti, t in enumerate(uniq)},
         "pruned": False,
         "bound": "bmm-window",
         "thresholds": {},
-        "chunks_total": int(len(rows)),
+        "chunks_total": int(terms_a.size),
     }
     if theta <= 0.0:
         return chunks, stats
@@ -4504,34 +4571,15 @@ def _batch_blockmax_prune(
     from miru_spark.plans.chunkprune import chunk_window_max
 
     gate = _PRUNE_MIN_POSTINGS if prune_gate is None else prune_gate
-    idf = bm25.idf_col(F.col("df_global").cast("double"), F.lit(float(n_docs)))
-    ub_expr = idf * chunk_upper_col(avgdl)
-    lb_expr = idf * chunk_lower_col(avgdl)
-    meta = chunks.select(
-        F.col("term"),
-        F.col("first_docid"),
-        F.col("last_docid"),
-        ub_expr.alias("__ub"),
-        lb_expr.alias("__lb"),
-    )
-    cap = 1 << 20
-    rows = meta.limit(cap + 1).collect()
+    _, _, arrays = _chunk_bounds(chunks, n_docs, avgdl)
     stats: dict = {"pruned": False, "thetas": {}, "protected_terms": []}
-    if len(rows) > cap:  # pathological chunk count: skip rather than spill
+    if arrays is None:  # pathological chunk count: skip rather than spill
         return chunks, stats
-    terms_a = np.array([r["term"] for r in rows], dtype=object)
-    lo_a = np.array([r["first_docid"] for r in rows], dtype=np.int64)
-    hi_a = np.array([r["last_docid"] for r in rows], dtype=np.int64)
-    ub_a = np.array([r["__ub"] for r in rows], dtype=np.float64)
-    lb_a = np.array([r["__lb"] for r in rows], dtype=np.float64)
+    terms_a, lo_a, hi_a, ub_a, lb_a = arrays
     uniq, codes = np.unique(terms_a, return_inverse=True)
     code_of = {t: i for i, t in enumerate(uniq)}
-    kth_lb: dict[str, float] = {}
-    for ti, t in enumerate(uniq):
-        ls = lb_a[codes == ti]
-        if ls.size >= k:
-            kth_lb[t] = float(np.partition(ls, ls.size - k)[ls.size - k])
-    keep = np.zeros(len(rows), dtype=bool)
+    kth_lb = _kth_largest(terms_a, lb_a, k)
+    keep = np.zeros(terms_a.size, dtype=bool)
     protected: set[str] = set()
     for qi, (terms, mode) in enumerate(queries):
         uterms = list(dict.fromkeys(terms))
@@ -4599,14 +4647,6 @@ def search_distributed(
     n_docs = float(reader.n_docs)
     avgdl = float(reader.avgdl)
     chunks, dfs = _postings_with_df(reader, terms)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("contrib", T.DoubleType()),
-        ]
-    )
-
     boost_map = {t: float(b) for t, b in (boosts or {}).items()}
     if any(not (b > 0) for b in boost_map.values()):  # <= 0 or NaN
         raise ValueError("boosts must be positive")
@@ -4665,9 +4705,7 @@ def search_distributed(
                 "left_semi",
             )
 
-    scored = chunks.mapInArrow(
-        bm25_contrib_gen(n_docs, avgdl, boost_map=boost_map), out_schema
-    )
+    scored = _contribs(chunks, n_docs, avgdl, boost_map=boost_map)
     if where:
         scored = scored.join(_where_ids(reader, where), "doc_id", "left_semi")
     if mode == "conjunctive" and len(terms) > 1:
@@ -4694,34 +4732,15 @@ def search_distributed(
         )
         agg = agg.join(ex_ids, "doc_id", "left_anti")
     agg = _drop_tombstones(reader, agg)
-    score = (
-        F.round(F.col("score"), round_digits)
-        if round_digits is not None
-        else F.col("score")
-    )
     if with_nmatch:
         if k is not None:
             raise ValueError("with_nmatch is for k=None internal callers")
         # distinct-term match count for per-doc floors (terms_set): terms
         # are distinct and each contributes one row per matching doc, so
         # the existing count(*) IS the distinct-match count
+        score = _rounded(F.col("score"), round_digits)
         return agg.select("doc_id", score.alias("score"), "nmatch")
-    out = agg.select("doc_id", score.alias("score"))
-    if after is not None:
-        # A38 keyset pagination on the cluster path: strictly-after the
-        # (score, doc_id) cursor in rank order, compared on the SAME
-        # rounded value the ordering uses — a codegen filter ahead of the
-        # TakeOrderedAndProject, so page depth never changes the plan cost
-        if k is None:
-            raise ValueError("after needs a top-k query (k is None)")
-        s_a, d_a = float(after[0]), int(after[1])
-        out = out.filter(
-            (F.col("score") < s_a)
-            | ((F.col("score") == s_a) & (F.col("doc_id") > d_a))
-        )
-    if k is None:  # unsorted candidate set (internal callers rank later)
-        return out
-    return out.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _ranked(agg, k, round_digits, after=after)
 
 
 def search_many_distributed(
@@ -4781,17 +4800,7 @@ def search_many_distributed(
                 prune_gate,
             )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("term", T.StringType()),
-            T.StructField("contrib", T.DoubleType()),
-        ]
-    )
-
-    scored = chunks.mapInArrow(
-        bm25_contrib_gen(n_docs, avgdl, emit_term=True), out_schema
-    )
+    scored = _contribs(chunks, n_docs, avgdl, emit_term=True)
     qrows = []
     for qid, (terms, mode) in enumerate(queries):
         uterms = list(dict.fromkeys(terms))
@@ -4810,11 +4819,7 @@ def search_many_distributed(
         )
     )
     agg = _drop_tombstones(reader, agg)
-    score = (
-        F.round(F.col("score"), round_digits)
-        if round_digits is not None
-        else F.col("score")
-    )
+    score = _rounded(F.col("score"), round_digits)
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -4870,10 +4875,5 @@ def search_terms_set(
             F.lit(1), (F.floor(F.col(mm_col) / divisor) + 1).cast("long")
         ),
     )
-    return (
-        cand.join(dm, "doc_id")
-        .filter(F.col("nmatch") >= floor_m)
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    cand = cand.join(dm, "doc_id").filter(F.col("nmatch") >= floor_m)
+    return _ranked(cand, k, None)

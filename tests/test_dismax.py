@@ -181,3 +181,27 @@ def test_validation(dm_readers):
         search_fields_dismax(dm_readers, [])
     with pytest.raises(ValueError, match="unknown mode"):
         search_fields_dismax(dm_readers, ["join"], mode="phrase")
+
+
+def test_half_applied_delete_never_serves(dm_readers, spark, tmp_path):
+    """A doc tombstoned in only the path field index, while it matches
+    only in content, is served by neither path (tombstones union across
+    fields); every other doc keeps its score."""
+    import os
+    import shutil
+
+    from miru_spark.index.writer import delete_docs
+
+    base = str(tmp_path / "idx")
+    shutil.copytree(os.path.dirname(dm_readers["path"].index_path), base)
+    kw = {"weights": WEIGHTS, "tie_breaker": 0.3, "k": 10**9}
+    full = search_fields_dismax(dm_readers, ["the"], **kw)
+    victim = full[0][0]
+    delete_docs(f"{base}/field=path", [victim])
+    readers = open_field_readers(spark, base)
+    got = search_fields_dismax(readers, ["the"], **kw)
+    assert got == [(d, s) for d, s in full if d != victim]
+    rows = search_fields_dismax_distributed(
+        readers, ["the"], weights=WEIGHTS, tie_breaker=0.3, k=None
+    ).collect()
+    assert {r.doc_id for r in rows} == {d for d, _ in got}

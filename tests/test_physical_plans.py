@@ -220,7 +220,11 @@ def _tombstone_gated_plans():
     """Every distributed path whose tombstone anti-join carries the size-gated
     broadcast hint, as reader -> DataFrame."""
     from miru_spark.plans.booltree import search_bool_distributed
-    from miru_spark.plans.multifield import search_fields_combined
+    from miru_spark.plans.dismax import search_fields_dismax_distributed
+    from miru_spark.plans.multifield import (
+        search_fields_combined,
+        search_fields_distributed,
+    )
     from miru_spark.plans.search import search_distributed, search_many_distributed
 
     return {
@@ -232,6 +236,12 @@ def _tombstone_gated_plans():
         ),
         "search_bool_distributed": lambda r: search_bool_distributed(r, "the"),
         "search_fields_combined": lambda r: search_fields_combined(
+            {"content": r}, ["the"]
+        ),
+        "search_fields_dismax_distributed": lambda r: (
+            search_fields_dismax_distributed({"content": r}, ["the"])
+        ),
+        "search_fields_distributed": lambda r: search_fields_distributed(
             {"content": r}, ["the"]
         ),
     }
