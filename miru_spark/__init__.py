@@ -17,3 +17,6 @@ section 2.9). No code is derived from the reference implementation.
 __version__ = "0.1.0"
 
 from miru_spark.session import get_spark  # noqa: F401
+from miru_spark.worker import setup as _setup_worker
+
+_setup_worker()  # once per PySpark worker process; a no-op in the driver

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from miru_spark.functions import bm25
 from miru_spark.index.format import impact_bound
 from miru_spark.index.writer import term_pref_py
+from miru_spark.session import local_frame
 
 
 # Bytes of materialised chunk rows one reader keeps resident, counted by
@@ -546,7 +547,7 @@ class IndexReader:
         schema = T.StructType(
             [*CHUNK_SCHEMA.fields, T.StructField("term_pref", T.IntegerType())]
         )
-        return self.spark.createDataFrame([], schema)
+        return local_frame(self.spark, schema)
 
     @property
     def tombstones(self) -> np.ndarray | None:

@@ -792,6 +792,7 @@ def search_bool_distributed(
             tomb = reader.tombstones
             allow_theta = (
                 k is not None
+                and k >= 1  # k < 1 ranks nothing: no k-th score to prune at
                 and where is None
                 and (tomb is None or tomb.size == 0)
             )

@@ -52,6 +52,7 @@ from miru_spark.plans.search import (
     _where_ids,
     _with_tombstones,
 )
+from miru_spark.session import local_frame
 
 
 def _check_tb(tie_breaker: float) -> float:
@@ -163,7 +164,7 @@ def search_fields_dismax_distributed(
     first = next(iter(readers.values()))
     scored = _field_contribs(readers, terms, w, tag_fields=True)
     if scored is None:
-        return first.spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(first.spark, "doc_id long, score double")
     if where:
         scored = scored.join(_where_ids(first, where), "doc_id", "left_semi")
     per_field = scored.groupBy("doc_id", "field").agg(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from miru_spark.index.reader import IndexReader
 from miru_spark.index.writer import build_index, read_manifest
 from miru_spark.schema import read_corpus
+from miru_spark.session import local_frame
 
 FLAGSHIP_TERMS = ["join", "hash"]
 
@@ -55,8 +56,10 @@ def flagship_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     reader = ensure_index(spark, sf_dir)
     topk = search_topk(reader, FLAGSHIP_TERMS, mode="conjunctive", k=10)
-    hits = spark.createDataFrame(
-        [(int(d), round(float(s), 6)) for d, s in topk], "doc_id long, score double"
+    hits = local_frame(
+        spark,
+        "doc_id long, score double",
+        [[int(d) for d, _ in topk], [round(float(s), 6) for _, s in topk]],
     )
     docmeta = reader.docmap_df().select("doc_id", "repo", "path", "commit")
     return (

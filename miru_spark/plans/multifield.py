@@ -47,6 +47,7 @@ from miru_spark.plans.search import (
     _where_ids,
     _with_tombstones,
 )
+from miru_spark.session import local_frame
 
 
 def default_field_exprs() -> dict:
@@ -290,7 +291,7 @@ def search_fields_combined(
     first = next(iter(readers.values()))
     spark = first.spark
     n_docs = float(first.n_docs)
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = local_frame(spark, "doc_id long, score double")
 
     # blended df + combined avgdl, driver-side (dictionary seeks + stats)
     dfc: dict[str, float] = {}
@@ -400,7 +401,7 @@ def search_fields_distributed(
     first = next(iter(readers.values()))
     scored = _field_contribs(readers, terms, w, tag_fields=False)
     if scored is None:
-        return first.spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(first.spark, "doc_id long, score double")
     if where:
         scored = scored.join(_where_ids(first, where), "doc_id", "left_semi")
     agg = scored.groupBy("doc_id").agg(

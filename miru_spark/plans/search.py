@@ -30,7 +30,6 @@ from collections.abc import Iterator
 from functools import reduce
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +39,7 @@ from miru_spark.filters import Range
 from miru_spark.functions import bm25
 from miru_spark.index.format import unpack_chunk_bm
 from miru_spark.index.reader import IndexReader, TermPostings
+from miru_spark.session import local_frame
 
 _EXHAUSTED = 1 << 62
 _EPS = 1e-12
@@ -2533,17 +2533,18 @@ def _filter_matches(reader, filters, exclude, where):
     names = sorted(filters)
     rows = [(n, t) for n in names for t in dict.fromkeys(filters[n])]
     spark = reader.spark
-    fdf = spark.createDataFrame(rows, "fname string, term string")
-    sdf = spark.createDataFrame(
-        [(n, len(dict.fromkeys(filters[n]))) for n in names],
+    fdf = local_frame(spark, "fname string, term string", list(zip(*rows)))
+    sdf = local_frame(
+        spark,
         "fname string, n_terms int",
+        [names, [len(dict.fromkeys(filters[n])) for n in names]],
     )
     chunks = reader.postings_df(sorted({t for _, t in rows}))
     ids = chunks.mapInArrow(_ids_term_arrow, _DOCID_TERM_SCHEMA)
     live = reader.docmap_df().select("doc_id")
     excl = _with_tombstones(reader, _exclusion_ids(reader, exclude or []))
     if excl is not None and excl.size:
-        dead = spark.createDataFrame([(int(d),) for d in excl], "doc_id long")
+        dead = local_frame(spark, "doc_id long", [excl])
         ids = ids.join(dead, "doc_id", "left_anti")
         live = live.join(dead, "doc_id", "left_anti")
     if where:
@@ -3839,7 +3840,7 @@ def search_lm(
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("empty term list")
-    if mu <= 0:
+    if not (mu > 0):  # <= 0 or NaN
         raise ValueError("mu must be > 0")
     if mode not in ("conjunctive", "disjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -4048,7 +4049,7 @@ def search_phrase_distributed(
     uterms = list(dict.fromkeys(seq))
     verified = phrase_verified_docs_df(reader, seq)
     if verified is None:
-        return reader.spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(reader.spark, "doc_id long, score double")
     scored = search_distributed(
         reader, uterms, mode="conjunctive", k=None, round_digits=None
     )
@@ -4385,18 +4386,12 @@ def _keep_chunks_by_key(
     a term. The surviving keys go back as a tiny broadcast semi-join (an
     Arrow-built local relation, no shuffle); even an overlap-violating
     index only makes the join KEEP extra rows, never drop a needed one."""
-    import pandas as pd
-
     if not keep.any():  # every chunk provably irrelevant (e.g. a
         return chunks.filter(F.lit(False))  # conjunction with an absent term)
-    kept = pd.DataFrame(
-        {
-            "term": terms[keep],
-            "first_docid": firsts[keep].astype(np.int64),
-        }
-    )
-    keys = chunks.sparkSession.createDataFrame(
-        kept, schema="term string, first_docid long"
+    keys = local_frame(
+        chunks.sparkSession,
+        "term string, first_docid long",
+        [terms[keep], firsts[keep].astype(np.int64)],
     )
     return chunks.join(F.broadcast(keys), ["term", "first_docid"], "left_semi")
 
@@ -4657,6 +4652,7 @@ def search_distributed(
     if (
         mode == "disjunctive"
         and k is not None
+        and k >= 1  # k < 1 ranks nothing: there is no k-th score to prune at
         and not exclude
         and where is None
         and not with_nmatch
@@ -4682,7 +4678,7 @@ def search_distributed(
     rare = None
     if mode == "conjunctive" and len(terms) > 1:
         if not dfs:  # no query term exists in the index
-            return reader.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(reader.spark, "doc_id long, score double")
         rare = min(dfs, key=dfs.get)
         if dfs[rare] <= _RANGE_PRUNE_MAX_RARE_DF:
             # chunk-range prune: a conjunctive match must appear in the
@@ -4784,10 +4780,10 @@ def search_many_distributed(
     global LAST_PRUNE_STATS
     LAST_PRUNE_STATS = {}
     tomb_np = reader.tombstones
-    if tomb_np is None or tomb_np.size == 0:
+    if k >= 1 and (tomb_np is None or tomb_np.size == 0):
         # batch theta chunk skipping: one shared metadata job, per-query
         # thresholds, keep-if-any-query-needs-it (_batch_blockmax_prune).
-        # Tombstones disable it exactly as on the single-query path.
+        # Tombstones and k < 1 disable it exactly as on the single-query path.
         if any(
             m == "disjunctive"
             and (p := [t for t in dict.fromkeys(ts) if t in term_dfs])
@@ -4806,8 +4802,9 @@ def search_many_distributed(
         uterms = list(dict.fromkeys(terms))
         for t in uterms:
             qrows.append((qid, t, len(uterms), mode))
-    qmap = spark.createDataFrame(
-        qrows, "query_id int, term string, n_terms int, mode string"
+    qmap = local_frame(
+        spark, "query_id int, term string, n_terms int, mode string",
+        list(zip(*qrows)),
     )
     agg = (
         scored.join(F.broadcast(qmap), "term")

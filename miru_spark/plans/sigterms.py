@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from miru_spark.index.reader import IndexReader
+from miru_spark.session import local_frame
 
 
 def significant_terms(
@@ -52,8 +53,8 @@ def significant_terms(
     cand = _candidates(reader, terms, mode, exclude, where)
     fg_size = cand.count()
     if fg_size == 0:
-        return reader.spark.createDataFrame(
-            [], "term string, fg_count long, bg_count long, score double"
+        return local_frame(
+            reader.spark, "term string, fg_count long, bg_count long, score double"
         )
     doc_terms = (
         corpus.select(

@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -56,10 +57,38 @@ def get_spark(
     return spark
 
 
+def local_frame(
+    spark: SparkSession, schema: str | T.StructType, columns=()
+) -> DataFrame:
+    """A relation built on the driver, shipped to Spark as one Arrow table.
+
+    ``columns`` holds one array-like per field of ``schema`` (a DDL string or
+    a StructType), in field order; none gives the empty relation. The plan
+    is a ``LocalTableScan``: no Python runs to read it. ``createDataFrame``
+    of a Python list, even an empty one, plans ``Scan ExistingRDD`` instead,
+    and every collect of it runs Python tasks, in a worker daemon that never
+    imports the engine."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, T.StructType):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    if not len(columns):
+        return spark.createDataFrame(arrow.empty_table(), schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
     """Pre-fork one Arrow-capable Python worker per core so the first real
     vectorized stage doesn't pay n concurrent numpy/pandas imports (a real
-    effect at local[32]; on a cluster each executor warms independently)."""
+    effect at local[32]; on a cluster each executor warms independently).
+    Each warmed worker also imports the engine, so it holds the worker
+    setup of :mod:`miru_spark.worker` before its first real task."""
     import pandas as pd  # noqa: F401
     from pyspark.sql import functions as F
 
@@ -70,6 +99,8 @@ def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
         import numpy  # noqa: F401
         import pandas  # noqa: F401
         import pyarrow  # noqa: F401
+
+        import miru_spark  # noqa: F401  (the worker setup, miru_spark.worker)
 
         yield from it
 

@@ -196,6 +196,9 @@ def main() -> None:
         sys.argv[2] if len(sys.argv) > 2
         else os.path.join(tempfile.gettempdir(), "miru_plan_dump")
     )
+    # Spark's Python workers start in this process's working directory and
+    # import the engine from there first, whatever PYTHONPATH says
+    os.chdir(ROOT)
     spark = get_spark(
         "plan-dump", master="local[2]", shuffle_partitions=4,
         extra_conf={

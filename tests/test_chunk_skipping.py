@@ -134,6 +134,28 @@ def test_prune_disabled_on_unsafe_paths(reader, monkeypatch):
     assert S.LAST_PRUNE_STATS.get("theta", 0.0) > 0.0
 
 
+def test_k_zero_pruned_equals_unpruned(reader):
+    """k=0 ranks nothing, so there is no k-th score to prune at: with the
+    gate off, the single-query, batched and boolean-tree paths skip the
+    theta prune and return what the unpruned plans return (nothing), where
+    the per-term k-th bound used to raise from ``np.partition``."""
+    from miru_spark.plans.booltree import search_bool_distributed
+
+    terms = ["the", "license"]
+    for gate in (0, 1 << 60):
+        assert search_bool_distributed(
+            reader, "the OR license", k=0, prune_gate=gate
+        ).collect() == []
+        assert S.search_distributed(
+            reader, terms, mode="disjunctive", k=0, prune_gate=gate
+        ).collect() == []
+        assert S.LAST_PRUNE_STATS == {}
+        assert S.search_many_distributed(
+            reader, [(terms, "disjunctive")], k=0, prune_gate=gate
+        ).collect() == []
+        assert S.LAST_PRUNE_STATS == {}
+
+
 def test_conjunctive_range_prune_identical(reader, monkeypatch):
     """Chunk-range pruning on the conjunctive path: identical results, and
     on a rare+hot pair the hot term's out-of-range chunks are skipped."""

@@ -79,3 +79,10 @@ def test_lm_validation(lm_reader):
         search_lm(lm_reader, ["the"], mu=0.0)
     with pytest.raises(ValueError):
         search_lm(lm_reader, ["the"], mode="nope")
+
+
+def test_lm_rejects_nan_mu(lm_reader):
+    """NaN fails ``mu > 0`` like any non-positive mu; accepted, it made
+    every score NaN."""
+    with pytest.raises(ValueError):
+        search_lm(lm_reader, ["the"], mu=float("nan"), k=3)

@@ -296,3 +296,50 @@ def test_tombstone_join_gated_not_forced_broadcast(spark, tmp_path, path):
         assert nodes2 and all(n != "BroadcastHashJoin" for n in nodes2)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _driver_built_relation_plans():
+    """Every serving path whose plan holds a relation built on the driver,
+    as reader -> DataFrame: the batched query map, the filter-match term
+    tables and exclusion ids, and the empty results."""
+    from miru_spark.plans.dismax import search_fields_dismax_distributed
+    from miru_spark.plans.multifield import search_fields_distributed
+    from miru_spark.plans.search import (
+        search_adjacency_matrix,
+        search_distributed,
+        search_filters_agg,
+        search_many_distributed,
+    )
+
+    filters = {"a": ["the"], "b": ["the", "license"]}
+    return {
+        "search_many_distributed": lambda r: search_many_distributed(
+            r, [(["the"], "disjunctive"), (["the", "license"], "conjunctive")]
+        ),
+        "search_filters_agg": lambda r: search_filters_agg(
+            r, filters, exclude=["spark"]
+        ),
+        "search_adjacency_matrix": lambda r: search_adjacency_matrix(
+            r, filters, exclude=["spark"]
+        ),
+        "search_distributed_empty": lambda r: search_distributed(
+            r, ["zzabsent1", "zzabsent2"], mode="conjunctive"
+        ),
+        "dismax_empty": lambda r: search_fields_dismax_distributed(
+            {"content": r}, ["the"], weights={"content": 0.0}
+        ),
+        "most_fields_empty": lambda r: search_fields_distributed(
+            {"content": r}, ["the"], weights={"content": 0.0}
+        ),
+    }
+
+
+@pytest.mark.parametrize("path", sorted(_driver_built_relation_plans()))
+def test_driver_built_relations_are_local_table_scans(reader, path):
+    """A driver-built relation is shipped as Arrow and scanned as a
+    LocalTableScan. Built from a Python list it is a Python RDD (``Scan
+    ExistingRDD``), and every collect of the plan runs Python tasks to
+    read it."""
+    plan = _plan(_driver_built_relation_plans()[path](reader))
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
