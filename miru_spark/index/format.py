@@ -342,25 +342,9 @@ def unpack_block_bm(blob, bm: dict, j: int, prev_last_docid: int, codec: int):
 def unpack_chunk_bm(blob, bm: dict, codec: int):
     """Decode a whole chunk from numpy block metadata (driver fast path —
     no per-block dict materialization; varint is one decode per stream)."""
-    nb = int(bm["n"].size)
-    if nb == 0:
-        e = np.empty(0, dtype=np.uint64)
-        return e, e.copy(), e.copy()
-    total = int(bm["n"].sum())
-    if codec == CODEC_VARINT:
-        gaps, _ = varint_decode(blob, int(bm["off_g"][0]), count=total)
-        tfs, _ = varint_decode(blob, int(bm["off_t"][0]), count=total)
-        dls, _ = varint_decode(blob, int(bm["off_d"][0]), count=total)
-        return delta_decode(gaps), tfs, dls
-    ids_l, tf_l, dl_l = [], [], []
-    prev = 0
-    for j in range(nb):
-        ids, tfs, dls = unpack_block_bm(blob, bm, j, prev, codec)
-        ids_l.append(ids)
-        tf_l.append(tfs)
-        dl_l.append(dls)
-        prev = int(bm["last"][j])
-    return np.concatenate(ids_l), np.concatenate(tf_l), np.concatenate(dl_l)
+    return unpack_chunk_np(
+        blob, bm["n"], bm["off_g"], bm["off_t"], bm["off_d"], bm["last"], codec
+    )
 
 
 def unpack_chunk_np(blob, ns, off_g, off_t, off_d, lasts, codec: int):

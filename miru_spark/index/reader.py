@@ -954,17 +954,19 @@ class IndexReader:
             tp.idf = float(bm25.idf_np(tp.df, float(self.n_docs)))
         return out
 
-    def decode_term(self, tp: TermPostings):
-        """Full decode -> (docids, tfs, dls) across chunks (exhaustive path)."""
-        from miru_spark.index.format import unpack_chunk_bm
+    def decode_term(self, tp: TermPostings, with_positions: bool = False):
+        """Full decode of a term's chunk rows -> int64 ``(docids, tfs, dls)``
+        in doc order, plus ``pos`` when ``with_positions``: the flat absolute
+        positions, each posting's ``tf`` of them in posting order (``tp``
+        fetched with ``with_positions=True``). Every driver path that reads
+        whole postings lists decodes them here."""
+        from miru_spark.index.format import unpack_chunk_bm, unpack_positions
 
-        ids, tfs, dls = [], [], []
+        parts = []
         for r in tp.chunks:
-            i, t, d = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids.append(i)
-            tfs.append(t)
-            dls.append(d)
-        e = np.empty(0, dtype=np.uint64)
-        if not ids:
-            return e, e.copy(), e.copy()
-        return np.concatenate(ids), np.concatenate(tfs), np.concatenate(dls)
+            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
+            pos = (unpack_positions(r["pos_blob"], tfs),) if with_positions else ()
+            parts.append((ids, tfs, dls, *pos))
+        if not parts:
+            return tuple(np.empty(0, np.int64) for _ in range(3 + with_positions))
+        return tuple(np.concatenate(col, dtype=np.int64) for col in zip(*parts))

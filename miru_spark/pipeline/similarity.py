@@ -71,15 +71,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def cosine_topk_oracle_sql(query_vec: list[float], k: int = 10, round_digits: int = 6) -> str:
-    vec = "[" + ", ".join(f"{float(x)!r}" for x in query_vec) + "]::DOUBLE[]"
-    return f"""
-SELECT vec_id,
-       ROUND(list_cosine_similarity(embedding::DOUBLE[], {vec}), {round_digits}) AS cos
-FROM embeddings ORDER BY cos DESC, vec_id ASC LIMIT {k}
-""".strip()
-
-
 def cosine_topk_filtered(
     embeddings: DataFrame,
     query_vec: list[float],

@@ -57,7 +57,9 @@ from miru_spark.plans.search import (
     _drop_tombstones,
     _keep_chunks_by_key,
     _kth_largest,
+    _live,
     _margin,
+    _pos_view,
     _postings_with_df,
     _ranked,
     _sum_by_doc,
@@ -329,27 +331,15 @@ class _Env:
                 e = np.empty(0, dtype=np.int64)
                 self._docs[term] = (e, np.empty(0))
             else:
-                ids, tfs, dls = self.reader.decode_term(tp)
+                d = self.reader.decode_term(tp, with_positions=self.need_pos)
+                ids, tfs, dls = d[:3]
                 self._docs[term] = (
-                    ids.astype(np.int64),
+                    ids,
                     bm25.score_np(tfs, tp.idf, dls, self.reader.avgdl),
                 )
                 if self.need_pos:
-                    self._pos[term] = (
-                        ids.astype(np.int64),
-                        tfs.astype(np.int64),
-                        self._unpack_positions(tp, tfs),
-                    )
+                    self._pos[term] = _pos_view(d)
         return self._docs[term]
-
-    def _unpack_positions(self, tp, tfs) -> np.ndarray:
-        from miru_spark.index.format import unpack_chunk_bm, unpack_positions
-
-        pos_l = []
-        for r in tp.chunks:
-            _, ctfs, _ = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            pos_l.append(unpack_positions(r["pos_blob"], ctfs).astype(np.int64))
-        return np.concatenate(pos_l) if pos_l else np.empty(0, dtype=np.int64)
 
     def phrase_docs(self, tokens: tuple[str, ...]) -> tuple[np.ndarray, np.ndarray]:
         """(sorted doc_ids with the exact consecutive-token phrase, summed
@@ -474,15 +464,8 @@ def search_bool(
     ids, scores = _eval(node, env)
     if ids.size == 0:
         return []
-    tomb = getattr(reader, "tombstones", None)
-    if tomb is not None and tomb.size:
-        keep = ~np.isin(ids, tomb, assume_unique=True)
-        ids, scores = ids[keep], scores[keep]
-    if where:
-        incl = reader.filter_doc_ids(where)
-        keep = np.isin(ids, incl, assume_unique=True)
-        ids, scores = ids[keep], scores[keep]
-    return _top_k(ids, scores, k, round_digits)
+    keep = np.isin(ids, _live(reader, ids, where), assume_unique=True)
+    return _top_k(ids[keep], scores[keep], k, round_digits)
 
 
 # ---------------------------------------------------------------------------
@@ -991,13 +974,7 @@ def search_constant_score(
         return []
     env = _Env(reader, node)
     ids, _ = _eval(node, env)
-    tomb = getattr(reader, "tombstones", None)
-    if tomb is not None and tomb.size:
-        ids = ids[~np.isin(ids, tomb, assume_unique=True)]
-    if where:
-        incl = reader.filter_doc_ids(where)
-        ids = ids[np.isin(ids, incl, assume_unique=True)]
-    return [(int(d), float(boost)) for d in ids[:k]]
+    return [(int(d), float(boost)) for d in _live(reader, ids, where)[:k]]
 
 
 def search_boosting(
@@ -1031,15 +1008,8 @@ def search_boosting(
     if nids.size:
         demote = np.isin(ids, nids, assume_unique=True)
         scores = np.where(demote, scores * negative_boost, scores)
-    tomb = getattr(reader, "tombstones", None)
-    if tomb is not None and tomb.size:
-        keep = ~np.isin(ids, tomb, assume_unique=True)
-        ids, scores = ids[keep], scores[keep]
-    if where:
-        incl = reader.filter_doc_ids(where)
-        keep = np.isin(ids, incl, assume_unique=True)
-        ids, scores = ids[keep], scores[keep]
-    return _top_k(ids, scores, k, round_digits)
+    keep = np.isin(ids, _live(reader, ids, where), assume_unique=True)
+    return _top_k(ids[keep], scores[keep], k, round_digits)
 
 
 def boosting_oracle_sql(

@@ -97,7 +97,6 @@ def search_fields_dismax(
             if t not in tps:
                 continue
             ids, tfs, dls = reader.decode_term(tps[t])
-            ids = ids.astype(np.int64)
             ids_parts.append(ids)
             per_term.append(ids)
             sc_parts.append(

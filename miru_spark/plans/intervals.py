@@ -63,8 +63,6 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from miru_spark.functions import bm25
-from miru_spark.index.format import unpack_chunk_bm, unpack_positions
 from miru_spark.index.reader import IndexReader
 
 
@@ -424,7 +422,7 @@ def search_intervals(
     filters).
     """
     global LAST_ROUTE
-    from miru_spark.plans.search import _top_k, _with_tombstones
+    from miru_spark.plans.search import _live, _term_scores, _top_k
 
     if strategy not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -452,17 +450,8 @@ def search_intervals(
     tps = reader.fetch_terms(terms, with_positions=True)
     data = {}
     for t, tp in tps.items():
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tp.chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        ids = np.concatenate(ids_l)
-        tfs = np.concatenate(tf_l)
-        off = np.concatenate([[0], np.cumsum(tfs)])
-        data[t] = (ids, tfs, np.concatenate(dl_l), np.concatenate(pos_l), off)
+        ids, tfs, dls, pos = reader.decode_term(tp, with_positions=True)
+        data[t] = (ids, tfs, dls, pos, np.concatenate([[0], np.cumsum(tfs)]))
 
     def cand_ids(node) -> np.ndarray:
         if isinstance(node, ITerm):
@@ -488,14 +477,7 @@ def search_intervals(
             u = s if u is None else np.intersect1d(u, s, assume_unique=True)
         return u
 
-    cand = cand_ids(spec)
-    if where:
-        cand = np.intersect1d(
-            cand, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        cand = cand[~np.isin(cand, tomb, assume_unique=True)]
+    cand = _live(reader, cand_ids(spec), where)
     if cand.size == 0:
         return []
 
@@ -526,12 +508,7 @@ def search_intervals(
     if mr.size == 0:
         return []
     v = cand[np.unique(mr)]
-    scores = np.zeros(v.size)
-    for t, (ids, tfs, dls, _, _) in data.items():
-        m = np.isin(v, ids, assume_unique=True)
-        idx = np.searchsorted(ids, v[m])
-        scores[m] += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    return _top_k(v, scores, k, round_digits)
+    return _top_k(v, _term_scores(reader, tps, data, data, v), k, round_digits)
 
 
 def _sql_quote(t: str) -> str:

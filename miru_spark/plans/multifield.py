@@ -145,7 +145,6 @@ def search_fields(
             if t not in tps:
                 continue
             ids, tfs, dls = reader.decode_term(tps[t])
-            ids = ids.astype(np.int64)
             acc_ids.append(ids)
             acc_scores.append(
                 bm25.score_np(tfs, tps[t].idf, dls, reader.avgdl) * w[fname]
@@ -222,7 +221,7 @@ def search_fields_cross(
                 continue
             reader = readers[fname]
             ids, tfs, dls = reader.decode_term(tps[t])
-            ids_l.append(ids.astype(np.int64))
+            ids_l.append(ids)
             s_l.append(
                 bm25.score_np(tfs, idf, dls, reader.avgdl) * w[fname]
             )

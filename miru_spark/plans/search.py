@@ -1205,7 +1205,7 @@ def explain(
             )
             continue
         ids, tfs, dls = reader.decode_term(tps[t])
-        j = int(np.searchsorted(ids, np.uint64(doc_id)))
+        j = int(np.searchsorted(ids, int(doc_id)))
         if j >= ids.size or int(ids[j]) != int(doc_id):
             details.append(
                 {"term": t, "matched": False, "reason": "no posting for doc"}
@@ -1338,8 +1338,8 @@ def search_synonym(
             continue
         ids_l, tfs_l, dls_l = [], [], []
         for t in have:
-            raw_ids, tfs, dls = reader.decode_term(tps[t])
-            ids_l.append(raw_ids.astype(np.int64))
+            ids, tfs, dls = reader.decode_term(tps[t])
+            ids_l.append(ids)
             tfs_l.append(tfs.astype(np.float64))
             dls_l.append(dls.astype(np.float64))
         ids = np.concatenate(ids_l)
@@ -2339,7 +2339,7 @@ def _exclusion_ids(reader: IndexReader, exclude) -> np.ndarray | None:
     tps = reader.fetch_terms(exclude)
     if not tps:
         return None
-    ids = [reader.decode_term(tp)[0].astype(np.int64) for tp in tps.values()]
+    ids = [reader.decode_term(tp)[0] for tp in tps.values()]
     return np.unique(np.concatenate(ids))
 
 
@@ -2694,7 +2694,7 @@ def search_sharded(
             if t not in tps:
                 continue
             ids, tfs, dls = r.decode_term(tps[t])
-            all_ids.append(ids.astype(np.int64))
+            all_ids.append(ids)
             all_scores.append(bm25.score_np(tfs, idf[t], dls, avgdl))
         ex = _with_tombstones(r, _exclusion_ids(r, exclude))
         if ex is not None and ex.size:
@@ -2757,8 +2757,7 @@ def _exhaustive_from_tps(
         if decode_cache is not None and t in decode_cache:
             ids, scores = decode_cache[t]
         else:
-            raw_ids, tfs, dls = reader.decode_term(tps[t])
-            ids = raw_ids.astype(np.int64)
+            ids, tfs, dls = reader.decode_term(tps[t])
             scores = bm25.score_np(tfs, tps[t].idf, dls, reader.avgdl)
             if decode_cache is not None:
                 decode_cache[t] = (ids, scores)
@@ -2903,6 +2902,41 @@ def survivor_docs(keys: np.ndarray) -> np.ndarray:
     return np.unique(keys >> np.uint64(32)).astype(np.int64)
 
 
+def _pos_view(d: tuple) -> tuple:
+    """``(ids, tfs, pos)`` of a ``decode_term(..., with_positions=True)``
+    tuple: the arrays occurrence keys are built from."""
+    return d[0], d[1], d[3]
+
+
+def _live(reader, docs: np.ndarray, where: dict | None) -> np.ndarray:
+    """Sorted unique ``docs`` kept by the ``where`` allowlist, tombstoned
+    docs dropped."""
+    if where:
+        docs = np.intersect1d(docs, reader.filter_doc_ids(where), assume_unique=True)
+    tomb = _with_tombstones(reader, None)
+    if tomb is not None:
+        docs = docs[~np.isin(docs, tomb, assume_unique=True)]
+    return docs
+
+
+def _term_scores(reader, tps, data, terms, docs, score=None, out=None):
+    """Per-doc sums at sorted unique ``docs`` of each term's score, added
+    in ``terms`` order into ``out`` (zeros by default); a doc a term does
+    not match gets nothing from it. ``data[t]`` starts with
+    ``decode_term``'s ``(ids, tfs, dls)``; ``score(t, tfs, dls)`` scores a
+    term's postings at those docs and defaults to BM25."""
+    if score is None:
+        def score(t, tfs, dls):
+            return bm25.score_np(tfs, tps[t].idf, dls, reader.avgdl)
+    out = np.zeros(docs.size) if out is None else out
+    for t in terms:
+        ids, tfs, dls = data[t][:3]
+        m = np.isin(docs, ids, assume_unique=True)
+        idx = np.searchsorted(ids, docs[m])
+        out[m] += score(t, tfs[idx], dls[idx])
+    return out
+
+
 PHRASE_DISTRIBUTED_CUTOFF = 1 << 23
 """Summed phrase-term df above which ``strategy="auto"`` routes
 :func:`search_phrase` to the distributed occurrence-join plan."""
@@ -2939,7 +2973,6 @@ def search_phrase(
     """
     global LAST_PHRASE_ROUTE
     from miru_spark.functions.tokenize import tokenize_py
-    from miru_spark.index.format import unpack_positions
 
     if strategy not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -2972,50 +3005,22 @@ def search_phrase(
     tps = reader.fetch_terms(uterms, with_positions=True)
     if len(tps) < len(uterms):
         return []
-    data: dict[str, tuple] = {}
-    for t in uterms:
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tps[t].chunks:
-            from miru_spark.index.format import unpack_chunk_bm
-
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        data[t] = (
-            np.concatenate(ids_l),
-            np.concatenate(tf_l),
-            np.concatenate(dl_l),
-            np.concatenate(pos_l),
-        )
+    data = {t: reader.decode_term(tps[t], with_positions=True) for t in uterms}
     cand = data[uterms[0]][0]
     for t in uterms[1:]:
         cand = np.intersect1d(cand, data[t][0], assume_unique=True)
         if cand.size == 0:
             return []
-    if where:
-        # metadata filter applied BEFORE position verification — shrinking
-        # the candidate set shrinks every occurrence mask below
-        cand = np.intersect1d(
-            cand, reader.filter_doc_ids(where), assume_unique=True
-        )
-        if cand.size == 0:
-            return []
-    survivors = phrase_survivor_keys(
-        lambda t: (data[t][0], data[t][1], data[t][3]), seq, cand
-    )
+    # metadata filter and tombstones applied BEFORE position verification —
+    # shrinking the candidate set shrinks every occurrence mask below
+    cand = _live(reader, cand, where)
+    if cand.size == 0:
+        return []
+    survivors = phrase_survivor_keys(lambda t: _pos_view(data[t]), seq, cand)
     if survivors.size == 0:
         return []
     verified = survivor_docs(survivors)
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        verified = verified[~np.isin(verified, tomb, assume_unique=True)]
-    scores = np.zeros(verified.size)
-    for t in uterms:
-        ids, tfs, dls, _ = data[t]
-        idx = np.searchsorted(ids, verified)
-        scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
+    scores = _term_scores(reader, tps, data, uterms, verified)
     return _top_k(verified, scores, k, round_digits)
 
 
@@ -3047,7 +3052,6 @@ def search_phrase_prefix(
     rules.
     """
     from miru_spark.functions.tokenize import tokenize_py
-    from miru_spark.index.format import unpack_chunk_bm, unpack_positions
 
     seq = tokenize_py(phrase, tokenizer)
     if not seq:
@@ -3069,28 +3073,11 @@ def search_phrase_prefix(
     tps = reader.fetch_terms(uterms, with_positions=True)
     if any(t not in tps for t in fixed):
         return []
-
-    def decode(t):
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tps[t].chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        return (
-            np.concatenate(ids_l),
-            np.concatenate(tf_l),
-            np.concatenate(dl_l),
-            np.concatenate(pos_l),
-        )
-
-    data = {t: decode(t) for t in uterms if t in tps}
-
-    def pos_view(t):
-        ids, tfs, _, pos = data[t]
-        return ids, tfs, pos
-
+    data = {
+        t: reader.decode_term(tps[t], with_positions=True)
+        for t in uterms
+        if t in tps
+    }
     # fixed-prefix survivors: candidate start keys where f1..fn occur
     # consecutively (None = unconstrained single-token prefix query)
     survivors = None
@@ -3100,7 +3087,9 @@ def search_phrase_prefix(
             cand = np.intersect1d(cand, data[t][0], assume_unique=True)
         if cand.size == 0:
             return []
-        survivors = phrase_survivor_keys(pos_view, fixed, cand)
+        survivors = phrase_survivor_keys(
+            lambda t: _pos_view(data[t]), fixed, cand
+        )
         if survivors.size == 0:
             return []
     last_off = len(fixed)
@@ -3110,13 +3099,13 @@ def search_phrase_prefix(
     for e in expansions:
         if e not in data:
             continue
-        keys = occurrence_keys(*pos_view(e), last_off)
+        keys = occurrence_keys(*_pos_view(data[e]), last_off)
         if survivors is not None:
             keys = np.intersect1d(keys, survivors, assume_unique=True)
         if keys.size == 0:
             continue
         docs_e = survivor_docs(keys)
-        ids, tfs, _, _ = data[e]
+        ids, tfs = data[e][:2]
         comp_docs.append(docs_e)
         comp_tfs.append(tfs[np.searchsorted(ids, docs_e)])
     if not comp_docs:
@@ -3126,12 +3115,7 @@ def search_phrase_prefix(
     verified, inv = np.unique(all_docs, return_inverse=True)
     gtf = np.zeros(verified.size, dtype=np.int64)
     np.add.at(gtf, inv, all_tfs)
-    excl = _with_tombstones(reader, None)
-    keep = np.ones(verified.size, dtype=bool)
-    if excl is not None:
-        keep &= ~np.isin(verified, excl, assume_unique=True)
-    if where:
-        keep &= np.isin(verified, reader.filter_doc_ids(where), assume_unique=True)
+    keep = np.isin(verified, _live(reader, verified, where), assume_unique=True)
     verified, gtf = verified[keep], gtf[keep]
     if verified.size == 0:
         return []
@@ -3147,10 +3131,9 @@ def search_phrase_prefix(
         float(reader.n_docs),
     )
     scores = bm25.score_np(gtf.astype(float), float(group_idf), dls, reader.avgdl)
-    for t in dict.fromkeys(fixed):
-        ids, tfs, dlst, _ = data[t]
-        idx = np.searchsorted(ids, verified)
-        scores += bm25.score_np(tfs[idx], tps[t].idf, dlst[idx], reader.avgdl)
+    # the fixed terms add onto the group score in phrase order: a float
+    # sum depends on its order
+    _term_scores(reader, tps, data, dict.fromkeys(fixed), verified, out=scores)
     return _top_k(verified, scores, k, round_digits)
 
 
@@ -3177,8 +3160,6 @@ def search_near(
     both neighbors; only the forward neighbor when ordered) decides every
     candidate at once — no per-doc loop.
     """
-    from miru_spark.index.format import unpack_positions
-
     if slop < 0:
         raise ValueError("slop must be >= 0")
     if term_a == term_b:
@@ -3190,40 +3171,14 @@ def search_near(
     tps = reader.fetch_terms([term_a, term_b], with_positions=True)
     if len(tps) < 2:
         return []
-    data = {}
-    for t in (term_a, term_b):
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tps[t].chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        data[t] = (
-            np.concatenate(ids_l),
-            np.concatenate(tf_l),
-            np.concatenate(dl_l),
-            np.concatenate(pos_l),
-        )
+    terms = (term_a, term_b)
+    data = {t: reader.decode_term(tps[t], with_positions=True) for t in terms}
     cand = np.intersect1d(data[term_a][0], data[term_b][0], assume_unique=True)
-    if where:
-        cand = np.intersect1d(
-            cand, reader.filter_doc_ids(where), assume_unique=True
-        )
+    cand = _live(reader, cand, where)
     if cand.size == 0:
         return []
-
-    def occ_keys(t):
-        # uint64 keys: doc_id * 2^32 + position stays exact and SORTED for
-        # doc_ids up to 2^32 (int64 would wrap negative at doc_id >= 2^31
-        # and silently break the searchsorted)
-        ids, tfs, _, pos = data[t]
-        m = np.repeat(np.isin(ids, cand, assume_unique=True), tfs)
-        return np.repeat(ids, tfs)[m].astype(np.uint64) * np.uint64(
-            1 << 32
-        ) + pos[m].astype(np.uint64)
-
-    ka, kb = occ_keys(term_a), occ_keys(term_b)
+    # uint64 keys stay SORTED for doc_ids up to 2^32, so searchsorted works
+    ka, kb = (occurrence_keys(*_pos_view(data[t]), 0, cand) for t in terms)
     uslop = np.uint64(slop)
     j = np.searchsorted(kb, ka)
     near = np.zeros(ka.size, dtype=bool)
@@ -3232,17 +3187,10 @@ def search_near(
         near[left] = ka[left] - kb[j[left] - 1] <= uslop
     right = j < kb.size
     near[right] |= kb[j[right]] - ka[right] <= uslop
-    verified = np.unique(ka[near] >> np.uint64(32)).astype(np.int64)
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        verified = verified[~np.isin(verified, tomb, assume_unique=True)]
+    verified = survivor_docs(ka[near])
     if verified.size == 0:
         return []
-    scores = np.zeros(verified.size)
-    for t in (term_a, term_b):
-        ids, tfs, dls, _ = data[t]
-        idx = np.searchsorted(ids, verified)
-        scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
+    scores = _term_scores(reader, tps, data, terms, verified)
     return _top_k(verified, scores, k, round_digits)
 
 
@@ -3267,8 +3215,6 @@ def search_span_first(
     scores SpanFirst through the same term weight), so results are a
     position-filtered subset of the single-term ranking.
     """
-    from miru_spark.index.format import unpack_positions
-
     if end < 1:
         raise ValueError("end must be >= 1 (first N positions)")
     if not reader.positions:
@@ -3278,29 +3224,12 @@ def search_span_first(
     tps = reader.fetch_terms([term], with_positions=True)
     if term not in tps:
         return []
-    ids_l, tf_l, dl_l, pos_l = [], [], [], []
-    for r in tps[term].chunks:
-        ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-        ids_l.append(ids.astype(np.int64))
-        tf_l.append(tfs.astype(np.int64))
-        dl_l.append(dls.astype(np.int64))
-        pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-    ids = np.concatenate(ids_l)
-    tfs = np.concatenate(tf_l)
-    dls = np.concatenate(dl_l)
-    pos = np.concatenate(pos_l)
-    verified = np.unique(np.repeat(ids, tfs)[pos < end])
-    if where:
-        verified = np.intersect1d(
-            verified, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        verified = verified[~np.isin(verified, tomb, assume_unique=True)]
+    data = {term: reader.decode_term(tps[term], with_positions=True)}
+    ids, tfs, _, pos = data[term]
+    verified = _live(reader, np.unique(np.repeat(ids, tfs)[pos < end]), where)
     if verified.size == 0:
         return []
-    idx = np.searchsorted(ids, verified)
-    scores = bm25.score_np(tfs[idx], tps[term].idf, dls[idx], reader.avgdl)
+    scores = _term_scores(reader, tps, data, [term], verified)
     return _top_k(verified, scores, k, round_digits)
 
 
@@ -3328,8 +3257,6 @@ def search_span_not(
     Scores are the include term's plain BM25 — Lucene scores span_not
     through the include weight, same convention as :func:`search_span_first`.
     """
-    from miru_spark.index.format import unpack_positions
-
     if pre < 0 or post < 0:
         raise ValueError("pre and post must be >= 0")
     if term == excl_term:
@@ -3339,31 +3266,10 @@ def search_span_not(
     tps = reader.fetch_terms([term, excl_term], with_positions=True)
     if term not in tps:
         return []
-
-    def occ(t):
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tps[t].chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        return (
-            np.concatenate(ids_l),
-            np.concatenate(tf_l),
-            np.concatenate(dl_l),
-            np.concatenate(pos_l),
-        )
-
-    ids_a, tfs_a, dls_a, pos_a = occ(term)
-    ka = np.repeat(ids_a, tfs_a).astype(np.uint64) * np.uint64(1 << 32) + pos_a.astype(
-        np.uint64
-    )
-    if excl_term in tps:
-        ids_b, tfs_b, _, pos_b = occ(excl_term)
-        kb = np.repeat(ids_b, tfs_b).astype(np.uint64) * np.uint64(
-            1 << 32
-        ) + pos_b.astype(np.uint64)
+    data = {t: reader.decode_term(tps[t], with_positions=True) for t in tps}
+    ka = occurrence_keys(*_pos_view(data[term]), 0)
+    if excl_term in data:
+        kb = occurrence_keys(*_pos_view(data[excl_term]), 0)
         upre, upost = np.uint64(pre), np.uint64(post)
         lo = ka - np.minimum(ka, upre)  # clamp doc-0 underflow
         # bad iff any exclusion key in [ka-pre, ka+post]
@@ -3373,36 +3279,32 @@ def search_span_not(
         surviving = ka[~bad]
     else:
         surviving = ka
-    verified = np.unique(surviving >> np.uint64(32)).astype(np.int64)
-    if where:
-        verified = np.intersect1d(
-            verified, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        verified = verified[~np.isin(verified, tomb, assume_unique=True)]
+    verified = _live(reader, survivor_docs(surviving), where)
     if verified.size == 0:
         return []
-    idx = np.searchsorted(ids_a, verified)
-    scores = bm25.score_np(tfs_a[idx], tps[term].idf, dls_a[idx], reader.avgdl)
+    scores = _term_scores(reader, tps, data, [term], verified)
     return _top_k(verified, scores, k, round_digits)
 
 
-def _span_enclosure_docs(
+def _span_enclosure_topk(
     reader: IndexReader,
     term_a: str,
     term_b: str,
     little: str,
     slop: int,
-):
-    """Shared verification core for ``span_within`` / ``span_containing``
-    (Lucene SpanWithinQuery / SpanContainingQuery). The *big* span is an
-    ordered pair — an occurrence of ``term_a`` followed by ``term_b`` at
-    most ``slop`` positions later (the span covers ``[a_pos, b_pos]``,
-    Lucene span_near(inOrder=true) convention shared with
-    :func:`search_near`); the *little* span is a single ``little``
-    occurrence. A doc matches iff some little occurrence lies inside some
-    big span: ``a_pos <= t_pos <= b_pos`` with ``b_pos - a_pos <= slop``.
+    score_terms: list[str],
+    k: int,
+    round_digits: int | None,
+    where: dict | None,
+) -> list[tuple[int, float]]:
+    """Shared core of ``span_within`` / ``span_containing`` (Lucene
+    SpanWithinQuery / SpanContainingQuery). The *big* span is an ordered
+    pair — an occurrence of ``term_a`` followed by ``term_b`` at most
+    ``slop`` positions later (the span covers ``[a_pos, b_pos]``, Lucene
+    span_near(inOrder=true) convention shared with :func:`search_near`);
+    the *little* span is a single ``little`` occurrence. A doc matches iff
+    some little occurrence lies inside some big span:
+    ``a_pos <= t_pos <= b_pos`` with ``b_pos - a_pos <= slop``.
 
     Vectorized exactly like :func:`search_near`: occurrences become sorted
     ``doc*2^32 + pos`` keys, and for every little key the NEAREST enclosing
@@ -3412,9 +3314,10 @@ def _span_enclosure_docs(
     difference exceeds ``slop``). One searchsorted per side decides every
     occurrence at once; no per-doc loop.
 
-    Returns ``(verified_doc_ids_asc, tps, data)`` where ``data[t]`` is the
-    concatenated ``(ids, tfs, dls)`` arrays per term, or ``None`` when any
-    leaf term is absent from the dictionary (empty result).
+    Matching docs rank by the sum of ``score_terms``' BM25 — the Lucene
+    convention that a span query scores through its weight's clause terms
+    (little for ``within``, the big pair for ``containing``). Any leaf term
+    absent from the dictionary means an empty result.
     """
     if slop < 1:
         raise ValueError("slop must be >= 1 (the big span is an ordered pair)")
@@ -3425,36 +3328,14 @@ def _span_enclosure_docs(
             "span_within/span_containing need a positional index"
             " (positions=True)"
         )
-    from miru_spark.index.format import unpack_positions
-
     terms = list(dict.fromkeys([term_a, term_b, little]))
     tps = reader.fetch_terms(terms, with_positions=True)
     if any(t not in tps for t in terms):
-        return None
-
-    data: dict[str, tuple] = {}
-    for t in terms:
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tps[t].chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        data[t] = (
-            np.concatenate(ids_l),
-            np.concatenate(tf_l),
-            np.concatenate(dl_l),
-            np.concatenate(pos_l),
-        )
-
-    def occ_keys(t):
-        ids, tfs, _, pos = data[t]
-        return np.repeat(ids, tfs).astype(np.uint64) * np.uint64(
-            1 << 32
-        ) + pos.astype(np.uint64)
-
-    ka, kb, kt = occ_keys(term_a), occ_keys(term_b), occ_keys(little)
+        return []
+    data = {t: reader.decode_term(tps[t], with_positions=True) for t in terms}
+    ka, kb, kt = (
+        occurrence_keys(*_pos_view(data[t]), 0) for t in (term_a, term_b, little)
+    )
     ia = np.searchsorted(ka, kt, side="right") - 1  # largest a-key <= t
     ib = np.searchsorted(kb, kt, side="left")  # smallest b-key >= t
     ok = (ia >= 0) & (ib < kb.size)
@@ -3463,37 +3344,10 @@ def _span_enclosure_docs(
     # strict order a < b (equal keys impossible across distinct terms, but
     # keep the guard so a degenerate little==endpoint case stays a SPAN)
     pair_ok &= kb[ib[sel]] > ka[ia[sel]]
-    verified = np.unique(kt[sel[pair_ok]] >> np.uint64(32)).astype(np.int64)
-    return verified, tps, data
-
-
-def _span_enclosure_topk(
-    reader: IndexReader,
-    verified: np.ndarray,
-    score_terms: list[str],
-    tps,
-    data,
-    k: int,
-    round_digits: int | None,
-    where: dict | None,
-) -> list[tuple[int, float]]:
-    """Rank a span-verified doc set by the sum of the given terms' BM25 —
-    the Lucene convention that a span query scores through its weight's
-    clause terms (little for ``within``, the big pair for ``containing``)."""
-    if where:
-        verified = np.intersect1d(
-            verified, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        verified = verified[~np.isin(verified, tomb, assume_unique=True)]
+    verified = _live(reader, survivor_docs(kt[sel[pair_ok]]), where)
     if verified.size == 0:
         return []
-    scores = np.zeros(verified.size)
-    for t in score_terms:
-        ids, tfs, dls, _ = data[t]
-        idx = np.searchsorted(ids, verified)
-        scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
+    scores = _term_scores(reader, tps, data, score_terms, verified)
     return _top_k(verified, scores, k, round_digits)
 
 
@@ -3520,12 +3374,8 @@ def search_span_within(
     `plans/intervals.py` (ordered interval with a contained leaf), which
     the df-threshold auto-route already serves distributed.
     """
-    got = _span_enclosure_docs(reader, term_a, term_b, little, slop)
-    if got is None:
-        return []
-    verified, tps, data = got
     return _span_enclosure_topk(
-        reader, verified, [little], tps, data, k, round_digits, where
+        reader, term_a, term_b, little, slop, [little], k, round_digits, where
     )
 
 
@@ -3546,19 +3396,9 @@ def search_span_containing(
     :func:`search_span_within` — the two queries differ only in which
     clause carries the score, mirroring Lucene's within/containing
     duality."""
-    got = _span_enclosure_docs(reader, term_a, term_b, little, slop)
-    if got is None:
-        return []
-    verified, tps, data = got
+    big = list(dict.fromkeys([term_a, term_b]))
     return _span_enclosure_topk(
-        reader,
-        verified,
-        list(dict.fromkeys([term_a, term_b])),
-        tps,
-        data,
-        k,
-        round_digits,
-        where,
+        reader, term_a, term_b, little, slop, big, k, round_digits, where
     )
 
 
@@ -3684,14 +3524,8 @@ def search_sorted_topk(
     first = cand[:k]
     if first.size == 0:
         return []
-    scores = np.zeros(first.size)
-    for t in tps:
-        ids = np.concatenate([d[0] for d in decoded[t]])
-        tfs = np.concatenate([d[1] for d in decoded[t]])
-        dls = np.concatenate([d[2] for d in decoded[t]])
-        m = np.isin(first, ids, assume_unique=True)
-        idx = np.searchsorted(ids, first[m])
-        scores[m] += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
+    data = {t: [np.concatenate(col) for col in zip(*decoded[t])] for t in tps}
+    scores = _term_scores(reader, tps, data, tps, first)
     if round_digits is not None:
         scores = np.round(scores, round_digits)
     return [(int(d), float(s)) for d, s in zip(first.tolist(), scores.tolist())]
@@ -3723,7 +3557,6 @@ def search_phrase_sloppy(
     Rank = conjunctive BM25 over the phrase's distinct terms (the phrase
     convention shared with search_phrase)."""
     from miru_spark.functions.tokenize import tokenize_py
-    from miru_spark.index.format import unpack_positions
 
     seq = tokenize_py(phrase, tokenizer)
     if len(seq) < 2:
@@ -3738,31 +3571,11 @@ def search_phrase_sloppy(
     tps = reader.fetch_terms(uterms, with_positions=True)
     if len(tps) < len(uterms):
         return []
-    data = {}
-    for t in uterms:
-        ids_l, tf_l, dl_l, pos_l = [], [], [], []
-        for r in tps[t].chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-            pos_l.append(unpack_positions(r["pos_blob"], tfs).astype(np.int64))
-        data[t] = (
-            np.concatenate(ids_l),
-            np.concatenate(tf_l),
-            np.concatenate(dl_l),
-            np.concatenate(pos_l),
-        )
+    data = {t: reader.decode_term(tps[t], with_positions=True) for t in uterms}
     cand = data[uterms[0]][0]
     for t in uterms[1:]:
         cand = np.intersect1d(cand, data[t][0], assume_unique=True)
-    if where:
-        cand = np.intersect1d(
-            cand, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        cand = cand[~np.isin(cand, tomb, assume_unique=True)]
+    cand = _live(reader, cand, where)
     if cand.size == 0:
         return []
     # per-term occurrence streams restricted to candidates, keyed by doc
@@ -3809,12 +3622,7 @@ def search_phrase_sloppy(
     if not verified:
         return []
     v = np.array(verified, dtype=np.int64)
-    scores = np.zeros(v.size)
-    for t in uterms:
-        ids, tfs, dls, _ = data[t]
-        idx = np.searchsorted(ids, v)
-        scores += bm25.score_np(tfs[idx], tps[t].idf, dls[idx], reader.avgdl)
-    return _top_k(v, scores, k, round_digits)
+    return _top_k(v, _term_scores(reader, tps, data, uterms, v), k, round_digits)
 
 
 def search_lm(
@@ -3842,52 +3650,14 @@ def search_lm(
         raise ValueError("empty term list")
     if not (mu > 0):  # <= 0 or NaN
         raise ValueError("mu must be > 0")
-    if mode not in ("conjunctive", "disjunctive"):
-        raise ValueError(f"unknown mode {mode!r}")
-    tps = reader.fetch_terms(terms)
-    if not tps or (mode == "conjunctive" and len(tps) < len(terms)):
-        return []
     n_tokens = float(reader.stats["n_tokens"])
-    per_term = []
-    for tp in tps.values():
-        ids_l, tf_l, dl_l = [], [], []
-        for r in tp.chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-        per_term.append(
-            (
-                np.concatenate(ids_l),
-                np.concatenate(tf_l),
-                np.concatenate(dl_l),
-            )
-        )
-    if mode == "conjunctive":
-        universe = per_term[0][0]
-        for ids, _, _ in per_term[1:]:
-            universe = np.intersect1d(universe, ids, assume_unique=True)
-    else:
-        universe = per_term[0][0]
-        for ids, _, _ in per_term[1:]:
-            universe = np.union1d(universe, ids)
-    if where:
-        universe = np.intersect1d(
-            universe, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        universe = universe[~np.isin(universe, tomb, assume_unique=True)]
-    if universe.size == 0:
-        return []
-    scores = np.zeros(universe.size)
-    for ids, tfs, dls in per_term:
-        m = np.isin(universe, ids, assume_unique=True)
-        idx = np.searchsorted(ids, universe[m])
-        scores[m] += bm25.lm_dirichlet_np(
-            tfs[idx], float(tfs.sum()), dls[idx], n_tokens, mu
-        )
-    return _top_k(universe, scores, k, round_digits)
+    return _similarity_topk(
+        reader, terms, mode, k, round_digits, where,
+        # the collection frequency is the term's decoded tf sum
+        lambda d, tfs, dls: bm25.lm_dirichlet_np(
+            tfs, float(d[1].sum()), dls, n_tokens, mu
+        ),
+    )
 
 
 def search_classic(
@@ -3911,49 +3681,42 @@ def search_classic(
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("empty term list")
+    n_docs = float(reader.stats["n_docs"])
+    return _similarity_topk(
+        reader, terms, mode, k, round_digits, where,
+        # df is the term's posting count
+        lambda d, tfs, dls: bm25.classic_np(tfs, float(d[0].size), dls, n_docs),
+    )
+
+
+def _similarity_topk(
+    reader: IndexReader, terms, mode, k, round_digits, where, score
+) -> list[tuple[int, float]]:
+    """Exhaustive top-k of :func:`search_lm` / :func:`search_classic`: the
+    union (disjunctive) or intersection (conjunctive) of the terms' docs,
+    ``where``-filtered and tombstones dropped, each doc scored by the sum
+    of ``score(decoded, tfs, dls)`` over the terms it matches, where
+    ``decoded`` is the term's ``decode_term`` tuple."""
     if mode not in ("conjunctive", "disjunctive"):
         raise ValueError(f"unknown mode {mode!r}")
     tps = reader.fetch_terms(terms)
     if not tps or (mode == "conjunctive" and len(tps) < len(terms)):
         return []
-    n_docs = float(reader.stats["n_docs"])
-    per_term = []
-    for tp in tps.values():
-        ids_l, tf_l, dl_l = [], [], []
-        for r in tp.chunks:
-            ids, tfs, dls = unpack_chunk_bm(r["blob"], r["bm"], int(r["codec"]))
-            ids_l.append(ids.astype(np.int64))
-            tf_l.append(tfs.astype(np.int64))
-            dl_l.append(dls.astype(np.int64))
-        per_term.append(
-            (
-                np.concatenate(ids_l),
-                np.concatenate(tf_l),
-                np.concatenate(dl_l),
-            )
-        )
-    if mode == "conjunctive":
-        universe = per_term[0][0]
-        for ids, _, _ in per_term[1:]:
-            universe = np.intersect1d(universe, ids, assume_unique=True)
-    else:
-        universe = per_term[0][0]
-        for ids, _, _ in per_term[1:]:
-            universe = np.union1d(universe, ids)
-    if where:
-        universe = np.intersect1d(
-            universe, reader.filter_doc_ids(where), assume_unique=True
-        )
-    tomb = _with_tombstones(reader, None)
-    if tomb is not None:
-        universe = universe[~np.isin(universe, tomb, assume_unique=True)]
+    data = {t: reader.decode_term(tp) for t, tp in tps.items()}
+    ids = [d[0] for d in data.values()]
+    universe = ids[0]
+    for x in ids[1:]:
+        if mode == "conjunctive":
+            universe = np.intersect1d(universe, x, assume_unique=True)
+        else:
+            universe = np.union1d(universe, x)
+    universe = _live(reader, universe, where)
     if universe.size == 0:
         return []
-    scores = np.zeros(universe.size)
-    for ids, tfs, dls in per_term:
-        m = np.isin(universe, ids, assume_unique=True)
-        idx = np.searchsorted(ids, universe[m])
-        scores[m] += bm25.classic_np(tfs[idx], float(ids.size), dls[idx], n_docs)
+    scores = _term_scores(
+        reader, tps, data, tps, universe,
+        lambda t, tfs, dls: score(data[t], tfs, dls),
+    )
     return _top_k(universe, scores, k, round_digits)
 
 

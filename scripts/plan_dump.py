@@ -1,11 +1,14 @@
 #!/usr/bin/env python
-"""Masked Spark plans and row digests for a fixed list of distributed calls.
+"""Masked Spark plans and row digests for a fixed list of distributed calls,
+and result digests for a fixed list of driver calls.
 
 A refactor of the distributed scorers should leave their Spark plans and
 results unchanged. This script makes that checkable: for every call in
 ``_calls()`` it prints the optimized and physical plan with expression ids
-masked, plus a sha1 digest of the call's sorted result rows. Run it at two
-commits and diff the outputs::
+masked, plus a sha1 digest of the call's sorted result rows. A refactor of
+the driver paths should leave their results bit-identical: for every call
+in ``_driver_calls()`` it prints a sha1 digest of the ranked, unrounded
+result. Run it at two commits and diff the outputs::
 
     python scripts/plan_dump.py OLD_CHECKOUT > old.txt
     python scripts/plan_dump.py NEW_CHECKOUT > new.txt
@@ -173,6 +176,104 @@ def _calls():
     }
 
 
+def _driver_calls():
+    """name -> fn(plain_reader, positional_reader, field_readers) -> a
+    driver result (ranked ``(doc_id, score)`` pairs, or ``explain``'s
+    dict), unrounded wherever the call rounds by default."""
+    from miru_spark.plans import booltree, dismax, intervals, multifield, search
+
+    iv = intervals
+    raw = {"round_digits": None}
+    span = iv.IAllOf((iv.IPhrase(("w0", "w1")), iv.ITerm("w2")), ordered=True)
+    return {
+        "phrase": lambda r, p, f: search.search_phrase(p, "w0 w1", k=50, **raw),
+        "phrase_where": lambda r, p, f: search.search_phrase(
+            p, "w1 w0 w2", k=50, where={"lang": "py"}, **raw
+        ),
+        "phrase_prefix": lambda r, p, f: search.search_phrase_prefix(
+            p, "w0 w1", k=50, **raw
+        ),
+        "phrase_prefix_where": lambda r, p, f: search.search_phrase_prefix(
+            p, "w2 w", k=50, where={"lang": "go"}, **raw
+        ),
+        "near": lambda r, p, f: search.search_near(p, "w0", "w3", k=50, **raw),
+        "near_ordered_where": lambda r, p, f: search.search_near(
+            p, "w1", "w2", slop=5, in_order=True, where={"lang": "js"}, k=50,
+            **raw,
+        ),
+        "span_first": lambda r, p, f: search.search_span_first(
+            p, "w2", end=4, k=50, **raw
+        ),
+        "span_not": lambda r, p, f: search.search_span_not(
+            p, "w0", "w1", pre=2, post=1, k=50, **raw
+        ),
+        "span_within": lambda r, p, f: search.search_span_within(
+            p, "w0", "w1", "w2", slop=8, k=50, **raw
+        ),
+        "span_containing_where": lambda r, p, f: search.search_span_containing(
+            p, "w0", "w1", "w2", slop=8, where={"lang": "rs"}, k=50, **raw
+        ),
+        "sloppy": lambda r, p, f: search.search_phrase_sloppy(
+            p, "w0 w1 w2", slop=3, k=50, **raw
+        ),
+        "sloppy_where": lambda r, p, f: search.search_phrase_sloppy(
+            p, "w1 w0", slop=2, where={"lang": "py"}, k=50, **raw
+        ),
+        "intervals": lambda r, p, f: iv.search_intervals(
+            p, span, k=50, strategy="driver", **raw
+        ),
+        "intervals_where": lambda r, p, f: iv.search_intervals(
+            p, span, k=50, where={"lang": "js"}, strategy="driver", **raw
+        ),
+        "lm": lambda r, p, f: search.search_lm(p, ["w0", "w5", "w9"], k=50, **raw),
+        "lm_conj_where": lambda r, p, f: search.search_lm(
+            p, ["w0", "w1"], mode="conjunctive", where={"lang": "go"}, k=50,
+            **raw,
+        ),
+        "classic": lambda r, p, f: search.search_classic(
+            p, ["w0", "w5", "w9"], k=50, **raw
+        ),
+        "classic_conj": lambda r, p, f: search.search_classic(
+            p, ["w0", "w1"], mode="conjunctive", k=50, **raw
+        ),
+        "sorted_topk": lambda r, p, f: search.search_sorted_topk(
+            p, ["w0", "w1"], k=30, **raw
+        ),
+        "bool_phrase": lambda r, p, f: booltree.search_bool(
+            p, '"w0 w1" OR w5', k=50, strategy="driver", **raw
+        ),
+        "bool_where": lambda r, p, f: booltree.search_bool(
+            p, 'w0 AND ("w1 w2" OR w6) AND NOT w3', k=50, where={"lang": "py"},
+            strategy="driver", **raw,
+        ),
+        "boosting": lambda r, p, f: booltree.search_boosting(
+            p, "w0 OR w1", "w2", k=50, **raw
+        ),
+        "constant_score": lambda r, p, f: booltree.search_constant_score(
+            p, "w0 AND w4", k=50, where={"lang": "py"}
+        ),
+        "exhaustive_exclude": lambda r, p, f: search.search_exhaustive(
+            r, ["w0", "w3"], mode="disjunctive", exclude=["w1"], k=50
+        ),
+        "sharded": lambda r, p, f: search.search_sharded(
+            [r, p], ["w0", "w3"], mode="disjunctive", k=50, **raw
+        ),
+        "synonym": lambda r, p, f: search.search_synonym(
+            r, [["w0", "w4"], ["w2"]], mode="disjunctive", k=50
+        ),
+        "explain": lambda r, p, f: search.explain(r, ["w0", "w3"], 40),
+        "dismax": lambda r, p, f: dismax.search_fields_dismax(
+            f, ["w0", "w3"], weights={"path": 2.0}, tie_breaker=0.3, k=50
+        ),
+        "most_fields": lambda r, p, f: multifield.search_fields(
+            f, ["w0", "w3"], weights={"path": 2.0}, k=50
+        ),
+        "cross_fields": lambda r, p, f: multifield.search_fields_cross(
+            f, ["w0", "w3"], weights={"path": 2.0}, k=50
+        ),
+    }
+
+
 _MASKS = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
@@ -225,6 +326,11 @@ def main() -> None:
             print(f"=== {name}{suffix}")
             print("\n".join(_mask(plan) for plan in plans))
             print(f"rows {len(rows)} sha1 {digest}")
+        for name, fn in _driver_calls().items():
+            got = fn(r, p, f)
+            digest = hashlib.sha1(repr(got).encode()).hexdigest()
+            print(f"=== driver {name}{suffix}")
+            print(f"rows {len(got)} sha1 {digest}")
     spark.stop()
 
 

@@ -2,19 +2,33 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from miru_spark.index.reader import IndexReader
 from miru_spark.index.writer import build_index, delete_docs, purge_deleted
+from miru_spark.plans import intervals as iv
+from miru_spark.plans.booltree import search_bool
 from miru_spark.plans.search import (
+    search_classic,
     search_count,
     search_distributed,
     search_exhaustive,
     search_facets,
     search_filters_agg,
+    search_lm,
+    search_near,
     search_phrase,
+    search_phrase_prefix,
+    search_phrase_sloppy,
+    search_span_containing,
+    search_span_first,
+    search_span_not,
+    search_span_within,
     search_topk,
 )
 from miru_spark.schema import read_corpus
@@ -25,17 +39,49 @@ DELETED = [169, 491, 7]
 
 @pytest.fixture(scope="module")
 def del_index(spark, tmp_path_factory):
-    p = str(tmp_path_factory.mktemp("delidx") / "idx")
+    base = tmp_path_factory.mktemp("delidx")
+    p = str(base / "idx")
     build_index(
         spark, read_corpus(spark, SF_DIR), p, num_partitions=4,
         positions=True, target_chunk=64,
     )
+    shutil.copytree(p, str(base / "live"))
     n = delete_docs(p, DELETED)
     assert n == len(DELETED)
     return p
 
 
-def test_tombstones_filter_every_path(spark, del_index, reader):
+@pytest.fixture(scope="module")
+def live_index(del_index):
+    """``del_index`` as it was before its deletes."""
+    return os.path.join(os.path.dirname(del_index), "live")
+
+
+# driver paths, k past every match: on the deleted index each returns the
+# undeleted index's ranking minus the dead docs, with unchanged scores
+_DRIVER_CALLS = {
+    "phrase": lambda x: search_phrase(x, "merge join", k=1000),
+    "phrase_prefix": lambda x: search_phrase_prefix(x, "merge jo", k=1000),
+    "near": lambda x: search_near(x, "hash", "join", slop=5, k=1000),
+    "span_first": lambda x: search_span_first(x, "hash", end=2, k=1000),
+    "span_not": lambda x: search_span_not(x, "join", "merge", pre=1, k=1000),
+    "span_within": lambda x: search_span_within(
+        x, "merge", "join", "hash", slop=8, k=1000
+    ),
+    "span_containing": lambda x: search_span_containing(
+        x, "merge", "join", "hash", slop=8, k=1000
+    ),
+    "phrase_sloppy": lambda x: search_phrase_sloppy(x, "hash agg", slop=2, k=1000),
+    "intervals": lambda x: iv.search_intervals(
+        x, iv.IAllOf((iv.IPhrase(("merge", "join")), iv.ITerm("hash"))), k=1000
+    ),
+    "lm": lambda x: search_lm(x, ["hash", "join"], k=1000),
+    "classic": lambda x: search_classic(x, ["hash", "join"], k=1000),
+    "bool_phrase": lambda x: search_bool(x, '"merge join" OR hash', k=1000),
+}
+
+
+def test_tombstones_filter_every_path(spark, del_index, live_index, reader):
     r = IndexReader(spark, del_index)
     assert sorted(r.tombstones.tolist()) == sorted(DELETED)
     base = search_topk(reader, ["join", "hash"], k=10)
@@ -48,6 +94,11 @@ def test_tombstones_filter_every_path(spark, del_index, reader):
         search_phrase(r, "the a", k=100),
     ]:
         assert not ({d for d, _ in got} & set(DELETED))
+    live = IndexReader(spark, live_index)
+    for name, call in _DRIVER_CALLS.items():
+        want = call(live)
+        assert {d for d, _ in want} & set(DELETED), name  # deletions bite
+        assert call(r) == [(d, s) for d, s in want if d not in DELETED], name
     # survivors keep their exact scores (tombstones only REMOVE docs)
     base_scores = dict(base)
     for d, s in search_topk(r, ["join", "hash"], k=10):
